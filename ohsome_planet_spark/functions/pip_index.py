@@ -49,11 +49,23 @@ class PolygonIndex:
                 (shell[:, 0].min(), shell[:, 1].min(), shell[:, 0].max(), shell[:, 1].max())
             )
         self.boxes = np.asarray(boxes, np.float64).reshape(len(boxes), 4)
+        # sorted distinct ids; a code is an index into it, so ascending
+        # codes are ascending ids
+        self.id_vocab: list[str] = sorted(set(self.ids))
+        code_of = {fid: i for i, fid in enumerate(self.id_vocab)}
+        self.part_codes = np.asarray([code_of[f] for f in self.ids], np.int64)
         self.grid_zoom = grid_zoom
         # cell → (tuple of fully-covering ids, tuple of candidate part indexes)
         self.grid: dict[int, tuple[tuple[str, ...], tuple[int, ...]]] = {}
+        self._nongrid_parts: list[int] = []
         if grid_zoom is not None and len(self.ids) > 0:
             self._build_grid(grid_zoom)
+        # the grid as sorted cell keys + CSR rows (covered id codes,
+        # candidate parts), so a probe looks cells up with searchsorted
+        self.grid_cells = np.asarray(sorted(self.grid), np.int64)
+        entries = [self.grid[c] for c in self.grid_cells.tolist()]
+        self._covered = _csr([[code_of[f] for f in cov] for cov, _ in entries])
+        self._candidates = _csr([cand for _, cand in entries])
 
     # -- grid build (BuildGridAction analog) --------------------------------
     def _build_grid(self, zoom: int) -> None:
@@ -61,7 +73,6 @@ class PolygonIndex:
         cell_w = 360.0 / n
         cell_h = 180.0 / n
         per_cell: dict[int, tuple[list[str], list[int]]] = {}
-        self._nongrid_parts: list[int] = []
         for pi, (fid, rings) in enumerate(zip(self.ids, self.rings)):
             xmin, ymin, xmax, ymax = self.boxes[pi]
             ix0 = max(0, int((xmin + 180.0) // cell_w))
@@ -130,48 +141,72 @@ class PolygonIndex:
         return [sorted(s) for s in out_sets]
 
     def join_points_grid(self, px: np.ndarray, py: np.ndarray) -> list[list[str]]:
-        """Sorted id set per point using the covered-cell shortcut (J5).
+        """Sorted id set per point using the covered-cell shortcut (J5);
+        the list form of join_points_codes."""
+        offsets, codes, ids = self.join_points_codes(px, py)
+        names = [ids[c] for c in codes.tolist()]
+        o = offsets.tolist()
+        return [names[o[i]:o[i + 1]] for i in range(len(o) - 1)]
 
-        Fully-covered cells contribute their ids without any exact test;
-        boundary cells ray-cast only against the cell's candidate parts.
-        Produces identical results to join_points (grid is an optimization,
-        exactly as SpatialGridJoiner vs SpatialIndexJoiner).
-        """
-        if self.grid_zoom is None or not self.grid:
-            return self.join_points(px, py)
+    def join_points_codes(
+        self, px: np.ndarray, py: np.ndarray
+    ) -> tuple[np.ndarray, np.ndarray, list[str]]:
+        """Sorted id set per point as CSR arrays: point i's ids are
+        `ids[c] for c in codes[offsets[i]:offsets[i + 1]]`, ascending.
+
+        Fully-covered grid cells contribute their ids without any exact
+        test; boundary cells ray-cast only against the cell's candidate
+        parts; parts too large for the grid (or every part, without a grid)
+        are bbox-filtered and probed exactly. Hits are collected as
+        (point, id code) pairs and deduplicated and sorted by one
+        `np.unique`, so no per-point Python runs. Produces identical
+        results to join_points (grid is an optimization, exactly as
+        SpatialGridJoiner vs SpatialIndexJoiner)."""
         px = np.asarray(px, np.float64)
         py = np.asarray(py, np.float64)
-        cells = zxy_cell(px, py, self.grid_zoom)
-        out_sets: list[set] = [set() for _ in range(px.size)]
-        order = np.argsort(cells, kind="stable")
-        sorted_cells = cells[order]
-        bounds = np.nonzero(np.diff(sorted_cells))[0] + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [sorted_cells.size]])
-        for s, e in zip(starts, ends):
-            cell = int(sorted_cells[s])
-            idxs = order[s:e]
-            entry = self.grid.get(cell)
-            if entry is None:
-                continue
-            covered, candidates = entry
-            for idx in idxs:
-                out_sets[idx].update(covered)
-            for pi in candidates:
-                hit = gnp.points_in_polygon(px[idxs], py[idxs], self.rings[pi])
-                for idx in idxs[hit]:
-                    out_sets[idx].add(self.ids[pi])
-        # parts too large for the grid are probed exactly for every point
-        for pi in getattr(self, "_nongrid_parts", []):
+        n = px.size
+        pts: list[np.ndarray] = []
+        cds: list[np.ndarray] = []
+
+        def hits(sel: np.ndarray, pi: int) -> None:
+            hit = sel[gnp.points_in_polygon(px[sel], py[sel], self.rings[pi])]
+            pts.append(hit)
+            cds.append(np.full(hit.size, self.part_codes[pi], np.int64))
+
+        exact_parts = range(len(self.ids))
+        if self.grid_zoom is not None and self.grid:
+            exact_parts = self._nongrid_parts
+            cells = zxy_cell(px, py, self.grid_zoom)
+            pos = np.searchsorted(self.grid_cells, cells)
+            pos[pos == self.grid_cells.size] = 0
+            sel = np.flatnonzero(self.grid_cells[pos] == cells)
+            entry = pos[sel]
+            p, c = _expand(sel, entry, *self._covered)
+            pts.append(p)
+            cds.append(c)
+            p, parts = _expand(sel, entry, *self._candidates)
+            order = np.argsort(parts, kind="stable")
+            p, parts = p[order], parts[order]
+            bounds = np.flatnonzero(np.diff(parts)) + 1
+            for s, e in zip(np.r_[0, bounds], np.r_[bounds, parts.size]):
+                if e > s:
+                    hits(p[s:e], int(parts[s]))
+        for pi in exact_parts:
             b = self.boxes[pi]
             sel = np.nonzero(
                 (px >= b[0]) & (px <= b[2]) & (py >= b[1]) & (py <= b[3])
             )[0]
             if sel.size:
-                hit = gnp.points_in_polygon(px[sel], py[sel], self.rings[pi])
-                for idx in sel[hit]:
-                    out_sets[idx].add(self.ids[pi])
-        return [sorted(s) for s in out_sets]
+                hits(sel, pi)
+        nv = max(len(self.id_vocab), 1)
+        if pts:
+            key = np.unique(np.concatenate(pts) * nv + np.concatenate(cds))
+        else:
+            key = np.empty(0, np.int64)
+        point = key // nv
+        offsets = np.zeros(n + 1, np.int64)
+        np.cumsum(np.bincount(point, minlength=n), out=offsets[1:])
+        return offsets, key - point * nv, self.id_vocab
 
     def join_geom(self, kind: str, data) -> list[str]:
         """Sorted id set for one geometry (JTS `intersects` analog, J4).
@@ -276,3 +311,22 @@ def _on_segment(px, py, x1, y1, x2, y2) -> np.ndarray:
         & (py >= np.minimum(y1, y2))
         & (py <= np.maximum(y1, y2))
     )
+
+
+def _csr(rows: list) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, values) of a list of int lists."""
+    offsets = np.zeros(len(rows) + 1, np.int64)
+    np.cumsum([len(r) for r in rows], out=offsets[1:])
+    values = np.asarray([v for r in rows for v in r], np.int64)
+    return offsets, values
+
+
+def _expand(
+    pts: np.ndarray, rows: np.ndarray, offsets: np.ndarray, values: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(point, value) pairs: pts[i] paired with every value of CSR row
+    rows[i]."""
+    lens = offsets[rows + 1] - offsets[rows]
+    total = int(lens.sum())
+    first = np.repeat(offsets[rows] - (np.cumsum(lens) - lens), lens)
+    return np.repeat(pts, lens), values[first + np.arange(total)]

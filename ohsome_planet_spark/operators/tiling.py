@@ -45,9 +45,9 @@ def _series_udf(fn):
         out = np.zeros(len(lon_v), dtype=np.int64)
         if ok.any():
             out[ok] = fn(lat_v[ok], lon_v[ok])
-        res = pd.Series(out)
-        res[~ok] = None
-        return res
+        # nullable Int64: an int64 Series with None assigned would turn
+        # float64 and round every id above 2^53
+        return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
     return udf
 

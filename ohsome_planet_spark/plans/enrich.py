@@ -5,74 +5,83 @@ End-to-end Spark plan mirroring the reference's main job
 java/org/heigit/ohsome/contributions/Contributions2Parquet.java:93-146`) over
 the graft's input shape:
 
+    gazetteer(entity, lat, lon)
+      → gazetteer kernel               (one mapInArrow stage over one wave
+                                        of cores: broadcast polygon-index
+                                        PIP countries, hex r7–10, S2, XZ2,
+                                        WKB point geometry)
+      → zxy cell                       (JVM expression)
+
     pages(url, warc_ts, html, text, lang)
       → extract entity mentions        (JVM regexp + posexplode)
-      → geocode                        (broadcast join to gazetteer)
-      → country PIP join               (broadcast polygon index, Arrow UDF)
-      → cell assignment                (hex r7–10, S2, zxy, XZ2)
-      → WKB point geometry             (Arrow UDF)
+      → geocode                        (broadcast join to the enriched
+                                        gazetteer: every mention's
+                                        enrichment comes with its entity)
       → per-cell aggregation           (salted two-level for mega-cells)
 
 Every stage is a DataFrame transformation: Catalyst prunes `html` out of the
 scan (we never touch it after generation), pushes filters, and broadcasts the
-small sides. The only Python is inside Arrow-batched kernels.
+small sides. The only Python is the gazetteer kernel, whatever the
+gazetteer's size; the default fixture gazetteer runs the same kernel once
+per session on the driver.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import (
+    ArrayType, BinaryType, DoubleType, LongType, StringType, StructField,
+    StructType,
+)
 
+from ..functions import cells as C
 from ..operators.geocode import extract_mentions, geocode_mentions
-from ..operators.spatial_join import build_index, with_countries
-from ..operators.tiling import with_cells
+from ..operators.spatial_join import build_index
+from ..operators.tiling import zxy_cell_col
 from ..sources.countries import fixture_features
 from ..sources.gazetteer import gazetteer_df
 
 
-@F.pandas_udf(BinaryType())
-def point_wkb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """WKB point (JTS-default big-endian 2D); empty point (NaN,NaN) for
-    invalid coords (the reference stores an empty geometry for invalid
-    nodes — `ContributionGeometry.java:185-191`).
+def point_wkb_array(x: np.ndarray, y: np.ndarray, valid: np.ndarray) -> pa.BinaryArray:
+    """WKB points (JTS-default big-endian 2D) as one Arrow binary array;
+    the empty point (NaN, NaN) where `valid` is False (the reference
+    stores an empty geometry for invalid nodes —
+    `ContributionGeometry.java:185-191`).
 
-    Fully vectorized: a point WKB is a fixed 21-byte record
-    (byte-order 0x00, >u4 type=1, >f8 x, >f8 y), so the whole batch is
-    assembled as one (N,21) uint8 matrix — invalid rows masked to NaN —
-    and sliced into per-row bytes. No per-row arithmetic in Python."""
-    import numpy as np
-
-    x = np.asarray(pd.to_numeric(lon, errors="coerce"), dtype=np.float64)
-    y = np.asarray(pd.to_numeric(lat, errors="coerce"), dtype=np.float64)
-    valid = (x >= -180.0) & (x <= 180.0) & (y >= -90.0) & (y <= 90.0)  # NaN→False
-    x = np.where(valid, x, np.nan)
-    y = np.where(valid, y, np.nan)
+    A point WKB is a fixed 21-byte record (byte-order 0x00, >u4 type=1,
+    >f8 x, >f8 y), so the batch is one (N,21) uint8 matrix wrapped as the
+    array's data buffer behind fixed offsets 0, 21, 42, …"""
     n = x.shape[0]
     buf = np.empty((n, 21), dtype=np.uint8)
     buf[:, 0:5] = np.array([0, 0, 0, 0, 1], dtype=np.uint8)  # big-endian, Point
-    buf[:, 5:13] = x.astype(">f8").view(np.uint8).reshape(n, 8)
-    buf[:, 13:21] = y.astype(">f8").view(np.uint8).reshape(n, 8)
-    mem = buf.tobytes()
-    return pd.Series([mem[i * 21 : i * 21 + 21] for i in range(n)])
+    buf[:, 5:13] = np.where(valid, x, np.nan).astype(">f8").view(np.uint8).reshape(n, 8)
+    buf[:, 13:21] = np.where(valid, y, np.nan).astype(">f8").view(np.uint8).reshape(n, 8)
+    offsets = np.arange(0, 21 * (n + 1), 21, dtype=np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(buf)])
 
 
-def _empty_point_wkb() -> bytes:
-    """The exact 21 bytes point_wkb_udf emits for invalid/missing coords
-    (big-endian Point with the masked-NaN ordinates), built with the same
-    numpy ops so the coalesce fallback is bit-identical."""
-    import numpy as np
-
-    buf = np.empty(21, dtype=np.uint8)
-    buf[0:5] = np.array([0, 0, 0, 0, 1], dtype=np.uint8)
-    nan = np.array([np.nan], dtype=np.float64).astype(">f8").view(np.uint8)
-    buf[5:13] = nan
-    buf[13:21] = nan
-    return buf.tobytes()
+def _in_range(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """ContributionGeometry.invalid, negated; NaN → False."""
+    return (x >= -180.0) & (x <= 180.0) & (y >= -90.0) & (y <= 90.0)
 
 
-_EMPTY_POINT_WKB = _empty_point_wkb()
+@F.pandas_udf(BinaryType())
+def point_wkb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
+    """WKB point per row (point_wkb_array); the empty point for invalid
+    coords."""
+    x = np.asarray(pd.to_numeric(lon, errors="coerce"), dtype=np.float64)
+    y = np.asarray(pd.to_numeric(lat, errors="coerce"), dtype=np.float64)
+    return point_wkb_array(x, y, _in_range(x, y)).to_pandas()
+
+
+# The exact 21 bytes point_wkb_array emits for invalid/missing coords.
+_EMPTY_POINT_WKB = point_wkb_array(
+    np.array([np.nan]), np.array([np.nan]), np.array([False]))[0].as_py()
 
 
 # zxy_cell_col evaluated on NULL lon/lat: Spark's greatest/least SKIP
@@ -81,9 +90,6 @@ _EMPTY_POINT_WKB = _empty_point_wkb()
 # unmatched mentions, and the join-carried plan must coalesce to the
 # identical value (z=12 → ix=iy=4095).
 _ZXY_NULL_CELL = 12 * 288230376151711744 + 4095 * 536870912 + 4095
-
-
-_GAZ_LOCAL_MAX = 50_000  # rows; above this fall back to the Spark path
 
 # Enriched-DEFAULT-gazetteer memo, keyed per session + options. The
 # default gazetteer and country features are CODE LITERALS
@@ -95,123 +101,126 @@ _GAZ_LOCAL_MAX = 50_000  # rows; above this fall back to the Spark path
 _GAZ_DEFAULT_MEMO: dict = {}
 
 
-def _enrich_gazetteer_local(
-    spark: SparkSession,
-    gazetteer: DataFrame,
-    index,
-    hex_resolutions: tuple[int, ...],
-    with_geometry: bool,
-    rows: list | None = None,
-) -> DataFrame | None:
-    """Enriched gazetteer computed DRIVER-SIDE with the same numpy
-    kernels the Arrow UDFs wrap (r7): the gazetteer is broadcast-tiny by
-    contract, but enriching it through Spark jobs cost a FIXED ~0.6 s of
-    Python-worker stage dispatch per pipeline run — measured as the
-    whole flagship regression at 1M pages (2.12 s vs 1.43 s), invisible
-    at 10M. Returns None when the gazetteer exceeds _GAZ_LOCAL_MAX rows
-    (caller falls back to the distributed path).
-
-    Value contract (pinned by the enrich equality tests): identical to
-    with_countries + with_cells + point_wkb_udf row by row — including
-    NULL cells for invalid/missing coords (the _series_udf mask), [] for
-    invalid countries, the zxy clamp (C.zxy_cell is the expression's
-    bit-exact twin; NULL coords get _ZXY_NULL_CELL, the JVM expression's
-    null-skipping greatest/least output), and the masked-NaN WKB."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType, BinaryType, DoubleType, LongType, StringType,
-        StructField, StructType,
-    )
-
-    from ..functions import cells as C
-
-    if rows is None:
-        rows = [
-            (r["entity"], r["lat"], r["lon"])
-            for r in gazetteer.select("entity", "lat", "lon").limit(
-                _GAZ_LOCAL_MAX + 1).collect()
-        ]
-    if len(rows) > _GAZ_LOCAL_MAX:
-        return None
-    n = len(rows)
-    ent = [r[0] for r in rows]
-    lat = np.array([float("nan") if r[1] is None else r[1]
-                    for r in rows], dtype=np.float64)
-    lon = np.array([float("nan") if r[2] is None else r[2]
-                    for r in rows], dtype=np.float64)
-    with np.errstate(invalid="ignore"):
-        ok = (~(np.isnan(lon) | np.isnan(lat))
-              & (lon >= -180.0) & (lon <= 180.0)
-              & (lat >= -90.0) & (lat <= 90.0))
-        # countries: the pip UDF's semantics — [] unless valid
-        countries: list[list[str]] = [[] for _ in range(n)]
-        if ok.any():
-            sel = np.nonzero(ok)[0]
-            pts = np.column_stack([lon[sel], lat[sel]])
-            uniq, inverse = np.unique(pts, axis=0, return_inverse=True)
-            hits = index.join_points_grid(uniq[:, 0], uniq[:, 1])
-            for pos, inv in zip(sel, inverse):
-                countries[pos] = hits[inv]
-        # cell kernels: valid → kernel value, else NULL (_series_udf)
-        notnan = ~(np.isnan(lon) | np.isnan(lat))
-
-        def series(fn):
-            out = [None] * n
-            if notnan.any():
-                vals = fn(lat[notnan], lon[notnan])
-                for pos, v in zip(np.nonzero(notnan)[0], vals):
-                    out[pos] = int(v)
-            return out
-
-        hex_cols = {
-            r: series(lambda la, lo, r=r: C.hex_cell(la, lo, r))
-            for r in hex_resolutions
-        }
-        s2 = series(lambda la, lo: C.s2_cell_id(la, lo, 12))
-        xz2 = series(lambda la, lo: C.xz2_point(lo, la, 16))
-        zxy = series(lambda la, lo: C.zxy_cell(lo, la, 12))
-        for i in range(n):
-            if zxy[i] is None:  # NULL coords: the JVM expression's
-                zxy[i] = _ZXY_NULL_CELL  # null-skipping clamp output
-        geom = None
-        if with_geometry:
-            x = np.where(ok, lon, np.nan)
-            y = np.where(ok, lat, np.nan)
-            buf = np.empty((n, 21), dtype=np.uint8)
-            buf[:, 0:5] = np.array([0, 0, 0, 0, 1], dtype=np.uint8)
-            buf[:, 5:13] = x.astype(">f8").view(np.uint8).reshape(n, 8)
-            buf[:, 13:21] = y.astype(">f8").view(np.uint8).reshape(n, 8)
-            mem = buf.tobytes()
-            geom = [mem[i * 21:(i + 1) * 21] for i in range(n)]
-
-    def opt(v):
-        return None if v is None else v
-
-    data = []
-    for i in range(n):
-        row = [ent[i],
-               None if np.isnan(lat[i]) else float(lat[i]),
-               None if np.isnan(lon[i]) else float(lon[i]),
-               list(countries[i])]
-        row += [opt(hex_cols[r][i]) for r in hex_resolutions]
-        row += [opt(s2[i]), int(zxy[i]), opt(xz2[i])]
-        if with_geometry:
-            row.append(geom[i])
-        data.append(tuple(row))
+def _gazetteer_schema(entity_type, hex_resolutions, with_geometry) -> StructType:
+    """Output schema of gazetteer_kernel (zxy_cell is added in the JVM)."""
     fields = [
-        StructField("entity", StringType()),
+        StructField("entity", entity_type),
         StructField("lat", DoubleType()),
         StructField("lon", DoubleType()),
         StructField("countries", ArrayType(StringType())),
     ]
-    fields += [StructField(f"hex_r{r}", LongType())
-               for r in hex_resolutions]
+    fields += [StructField(f"hex_r{r}", LongType()) for r in hex_resolutions]
     fields += [StructField("s2_cell", LongType()),
-               StructField("zxy_cell", LongType()),
                StructField("xz2_code", LongType())]
     if with_geometry:
         fields.append(StructField("geometry", BinaryType()))
-    return spark.createDataFrame(data, StructType(fields))
+    return StructType(fields)
+
+
+def gazetteer_kernel(
+    batch: pa.RecordBatch,
+    index,
+    hex_resolutions: tuple[int, ...],
+    with_geometry: bool,
+) -> pa.RecordBatch:
+    """(entity, lat, lon) → (+countries, hex_r*, s2_cell, xz2_code
+    [, geometry]): the whole per-entity enrichment of one Arrow batch.
+
+    Value contract (pinned by the enrich equality tests): identical to
+    with_countries + with_cells + point_wkb_udf row by row — the cell
+    codes are NULL only where a coordinate is null (out-of-range rows
+    get the kernel's value), countries are [] and the WKB is the NaN
+    empty point unless the coordinates are valid."""
+    lat = batch.column("lat").to_numpy(zero_copy_only=False)
+    lon = batch.column("lon").to_numpy(zero_copy_only=False)
+    n = batch.num_rows
+    notnull = ~(np.isnan(lat) | np.isnan(lon))
+    valid = _in_range(lon, lat)
+    null_mask = None if notnull.all() else ~notnull
+    la, lo = lat[notnull], lon[notnull]
+
+    def cells(codes: np.ndarray) -> pa.Array:
+        out = np.zeros(n, np.int64)
+        out[notnull] = codes
+        return pa.array(out, mask=null_mask)
+
+    sel = np.flatnonzero(valid)
+    offsets, codes, ids = index.join_points_codes(lon[sel], lat[sel])
+    per_row = np.zeros(n, np.int32)
+    per_row[sel] = np.diff(offsets)
+    list_offsets = np.zeros(n + 1, np.int32)
+    np.cumsum(per_row, out=list_offsets[1:])
+    countries = pa.ListArray.from_arrays(
+        pa.array(list_offsets), pa.array(ids, pa.string()).take(codes))
+
+    cols = [batch.column("entity"), batch.column("lat"), batch.column("lon"),
+            countries]
+    cols += [cells(C.hex_cell(la, lo, r)) for r in hex_resolutions]
+    cols += [cells(C.s2_cell_id(la, lo, 12)), cells(C.xz2_point(lo, la, 16))]
+    if with_geometry:
+        cols.append(point_wkb_array(lon, lat, valid))
+    names = _gazetteer_schema(
+        StringType(), hex_resolutions, with_geometry).fieldNames()
+    return pa.RecordBatch.from_arrays(cols, names)
+
+
+def enrich_gazetteer(
+    gazetteer: DataFrame,
+    index,
+    hex_resolutions: tuple[int, ...] = (7, 8, 9, 10),
+    with_geometry: bool = True,
+) -> DataFrame:
+    """The gazetteer with its per-entity enrichment columns: one
+    gazetteer_kernel stage over one wave of cores
+    (session.kernel_partitions), then the JVM zxy_cell expression."""
+    from ..session import kernel_partitions
+
+    spark = gazetteer.sparkSession
+    bc = spark.sparkContext.broadcast(index)
+
+    def run(batches):
+        idx = bc.value
+        for b in batches:
+            yield gazetteer_kernel(b, idx, hex_resolutions, with_geometry)
+
+    src = gazetteer.select(
+        "entity",
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+    )
+    schema = _gazetteer_schema(
+        src.schema["entity"].dataType, hex_resolutions, with_geometry)
+    out = src.repartition(kernel_partitions(spark)).mapInArrow(run, schema)
+    return out.withColumn(
+        "zxy_cell", zxy_cell_col(F.col("lon"), F.col("lat"), 12))
+
+
+def _default_gazetteer(
+    spark: SparkSession, hex_resolutions: tuple[int, ...], with_geometry: bool
+) -> DataFrame:
+    """The enriched default gazetteer, memoized per session: the same
+    kernel run on the driver (no Spark job), shipped as a local relation.
+
+    applicationId is unique per context — id(spark) could be reused by a
+    NEW session after the old one is GC'd, handing a dead-session
+    DataFrame out of the memo."""
+    from ..sources.gazetteer import gazetteer_rows
+
+    key = (spark.sparkContext.applicationId, hex_resolutions, with_geometry)
+    gaz = _GAZ_DEFAULT_MEMO.get(key)
+    if gaz is None:
+        ent, lat, lon = zip(*gazetteer_rows())
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(ent, pa.string()), pa.array(lat, pa.float64()),
+             pa.array(lon, pa.float64())], ["entity", "lat", "lon"])
+        table = pa.Table.from_batches([gazetteer_kernel(
+            batch, build_index(fixture_features()), hex_resolutions,
+            with_geometry)])
+        gaz = spark.createDataFrame(
+            table, _gazetteer_schema(StringType(), hex_resolutions, with_geometry)
+        ).withColumn("zxy_cell", zxy_cell_col(F.col("lon"), F.col("lat"), 12))
+        _GAZ_DEFAULT_MEMO[key] = gaz
+    return gaz
 
 
 def enrich_pages(
@@ -222,54 +231,23 @@ def enrich_pages(
     hex_resolutions: tuple[int, ...] = (7, 8, 9, 10),
     with_geometry: bool = True,
 ) -> DataFrame:
-    """pages → one enriched row per entity mention."""
-    default_fixture = features is None and gazetteer is None
+    """pages → one enriched row per entity mention.
+
+    Every mention's coordinates come FROM the gazetteer, so its country
+    set, cells and WKB are functions of the entity row: they are computed
+    once per gazetteer entity and carried by the geocode broadcast join
+    (the mention stream runs no Python). Unmatched mentions get the
+    values the per-mention kernels produce for null coordinates
+    (_assemble_enriched)."""
     mentions = extract_mentions(pages)
-    # r7 (guide §8: decide with small rows): every mention's coordinates
-    # come FROM the gazetteer, so the country set is a function of the
-    # entity row — run the PIP kernel once over the (tiny) gazetteer and
-    # let the geocode broadcast join carry `countries`, instead of
-    # probing the index per mention (the per-mention Arrow PIP stage was
-    # ~1.4 s of the 10M-page pipeline). Unmatched mentions get the same
-    # empty array the per-mention kernel produced for invalid coords.
-    if default_fixture:
-        # default fixture gazetteer+features are code literals: enrich
-        # once per session from gazetteer_rows() (no collect job, no
-        # index rebuild per call — see _GAZ_DEFAULT_MEMO note)
-        # applicationId is unique per context — id(spark) could be
-        # reused by a NEW session after the old one is GC'd, handing a
-        # dead-session DataFrame out of the memo
-        key = (spark.sparkContext.applicationId, hex_resolutions,
-               with_geometry)
-        gaz_cty = _GAZ_DEFAULT_MEMO.get(key)
-        if gaz_cty is None:
-            from ..sources.gazetteer import gazetteer_rows
-
-            gaz_cty = _enrich_gazetteer_local(
-                spark, None, build_index(fixture_features()),
-                hex_resolutions, with_geometry, rows=gazetteer_rows(),
-            )
-            _GAZ_DEFAULT_MEMO[key] = gaz_cty
-        geocoded = geocode_mentions(mentions, gaz_cty)
-        return _assemble_enriched(geocoded, hex_resolutions, with_geometry)
-
-    features = features if features is not None else fixture_features()
-    gazetteer = gazetteer if gazetteer is not None else gazetteer_df(spark)
-    index = build_index(features)
-    gaz_cty = _enrich_gazetteer_local(
-        spark, gazetteer, index, hex_resolutions, with_geometry
-    )
-    if gaz_cty is None:
-        # gazetteer too large to collect: same enrichment as Spark jobs
-        gaz_cty = with_cells(
-            with_countries(gazetteer, index),
-            hex_resolutions=hex_resolutions,
-        )
-        if with_geometry:
-            gaz_cty = gaz_cty.withColumn(
-                "geometry", point_wkb_udf(F.col("lon"), F.col("lat"))
-            )
-    geocoded = geocode_mentions(mentions, gaz_cty)
+    if features is None and gazetteer is None:
+        gaz = _default_gazetteer(spark, hex_resolutions, with_geometry)
+    else:
+        features = features if features is not None else fixture_features()
+        gazetteer = gazetteer if gazetteer is not None else gazetteer_df(spark)
+        gaz = enrich_gazetteer(
+            gazetteer, build_index(features), hex_resolutions, with_geometry)
+    geocoded = geocode_mentions(mentions, gaz)
     return _assemble_enriched(geocoded, hex_resolutions, with_geometry)
 
 

@@ -91,3 +91,50 @@ def test_csv_header_sniffing():
 def test_empty_index():
     idx = PolygonIndex([], grid_zoom=8)
     assert idx.join_points(np.array([1.0]), np.array([1.0])) == [[]]
+
+
+def _code_lists(idx, lon, lat):
+    offsets, codes, ids = idx.join_points_codes(lon, lat)
+    return [[ids[c] for c in codes[offsets[i]:offsets[i + 1]]]
+            for i in range(len(offsets) - 1)]
+
+
+@pytest.mark.parametrize("grid_zoom", [None, 4, 8, 10])
+def test_join_points_codes_equals_exact(index_nogrid, grid_zoom):
+    """CSR codes → lists equal the exact path: random points, gazetteer
+    points (shared borders, corners, edges) and the hole boundary."""
+    idx = PolygonIndex(fixture_features(), grid_zoom=grid_zoom)
+    rng = np.random.default_rng(7)
+    lon = rng.uniform(-5, 45, 4000)
+    lat = rng.uniform(-5, 45, 4000)
+    lon[:400] = np.round(lon[:400] * 2) / 2  # on cell and polygon edges
+    lat[:400] = np.round(lat[:400] * 2) / 2
+    lon = np.concatenate([lon, [g[2] for g in GAZETTEER], [6.0, 20.0]])
+    lat = np.concatenate([lat, [g[1] for g in GAZETTEER], [6.5, 15.0]])
+    got = _code_lists(idx, lon, lat)
+    assert got == index_nogrid.join_points(lon, lat)
+    assert got[-2] == ["AAA", "CCC"]  # hole boundary belongs to CCC
+    assert got[-1] == ["BBB", "EEE"]  # overlap: both ids
+    assert idx.join_points_grid(lon, lat) == got
+
+
+def test_join_points_codes_exploded_multipolygon():
+    """Two parts of one id: one code, hits from either part, no repeats."""
+    feats = parse_countries_csv(
+        "id;wkt\n"
+        "MM;MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)), ((1 1, 3 1, 3 3, 1 3, 1 1)))\n"
+        "ZZ;POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))\n")
+    lon = np.array([0.5, 1.5, 2.5, 5.0, 1.0])
+    lat = np.array([0.5, 1.5, 2.5, 5.0, 1.0])
+    exact = PolygonIndex(feats, grid_zoom=None).join_points(lon, lat)
+    assert exact == [["MM", "ZZ"], ["MM"], ["MM"], [], ["MM", "ZZ"]]
+    for zoom in (None, 8):
+        assert _code_lists(PolygonIndex(feats, grid_zoom=zoom), lon, lat) == exact
+
+
+def test_join_points_codes_empty():
+    offsets, codes, ids = PolygonIndex([], grid_zoom=8).join_points_codes(
+        np.array([1.0]), np.array([1.0]))
+    assert offsets.tolist() == [0, 0] and codes.size == 0 and ids == []
+    idx = PolygonIndex(fixture_features(), grid_zoom=8)
+    assert idx.join_points_codes(np.array([]), np.array([]))[0].tolist() == [0]

@@ -85,6 +85,29 @@ def test_with_cells_geohash_option(spark):
     assert geohash_cell(np.array([42.605]), np.array([-5.603]), 5)[0] == "ezs42"
 
 
+def test_with_cells_hex_exact_beside_null(spark):
+    """A null coordinate in the batch must not turn the int64 hex ids into
+    float64 (ids exceed 2^53): every valid row equals cells.hex_cell bit
+    for bit, and the null row stays NULL."""
+    import numpy as np
+
+    from ohsome_planet_spark.functions import cells as C
+    from ohsome_planet_spark.operators.tiling import with_cells
+
+    rng = np.random.default_rng(3)
+    lon = rng.uniform(-170, 170, 200)
+    lat = rng.uniform(-80, 80, 200)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    rows.append((200, None, 10.0))
+    df = spark.createDataFrame(rows, "id long, lon double, lat double")
+    out = sorted(with_cells(df, s2_level=None, zxy_zoom=None, xz2_g=None)
+                 .coalesce(1).collect())
+    for r in (7, 8, 9, 10):
+        got = [row[f"hex_r{r}"] for row in out]
+        assert got[:200] == C.hex_cell(lat, lon, r).tolist(), r
+        assert got[200] is None
+
+
 def test_tile_top_k(spark):
     from ohsome_planet_spark.operators.tiling import tile_top_k
 
