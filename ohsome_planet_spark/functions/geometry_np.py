@@ -26,6 +26,15 @@ GEOM_MULTIPOLYGON = 6
 GEOM_GEOMETRYCOLLECTION = 7
 
 
+def segment_ranges(counts: np.ndarray) -> np.ndarray:
+    """Each element's position within its segment, for segments of the
+    given lengths laid out back to back: [0..c0), [0..c1), ...
+    concatenated (the gather index of the offset-array layout)."""
+    counts = np.asarray(counts, np.int64)
+    starts = np.cumsum(counts) - counts
+    return np.arange(int(counts.sum())) - np.repeat(starts, counts)
+
+
 def ring_signed_area(lons: np.ndarray, lats: np.ndarray) -> float:
     """Planar shoelace area; positive = counter-clockwise."""
     x = np.asarray(lons, np.float64)

@@ -199,14 +199,73 @@ class PolygonIndex:
             if sel.size:
                 hits(sel, pi)
         nv = max(len(self.id_vocab), 1)
-        if pts:
-            key = np.unique(np.concatenate(pts) * nv + np.concatenate(cds))
-        else:
-            key = np.empty(0, np.int64)
-        point = key // nv
-        offsets = np.zeros(n + 1, np.int64)
-        np.cumsum(np.bincount(point, minlength=n), out=offsets[1:])
-        return offsets, key - point * nv, self.id_vocab
+        key = np.concatenate(pts) * nv + np.concatenate(cds) if pts else np.zeros(0, np.int64)
+        return _csr_of_keys(np.unique(key), n, nv) + (self.id_vocab,)
+
+    def join_geoms_codes(
+        self, kinds: np.ndarray, voff: np.ndarray, xs: np.ndarray, ys: np.ndarray
+    ) -> tuple[np.ndarray, np.ndarray, list[str]]:
+        """`join_geom` over a whole batch of geometries, as CSR arrays in
+        the form of join_points_codes (geometry g's ids are
+        `ids[c] for c in codes[offsets[g]:offsets[g + 1]]`, ascending).
+
+        Geometry g has kind kinds[g] (1 Point, 2 LineString, 3 Polygon —
+        the codes of `operators.history.batch_geometries`) and vertices
+        xs/ys[voff[g]:voff[g + 1]]; a Polygon is one closed shell ring,
+        no vertices is the empty geometry (no ids), and a Point with
+        several vertices gets the union of its vertices' ids (a
+        MultiPoint).
+
+        The three tests of join_geom, batched: every vertex is probed once
+        through join_points_codes; then, part by part, the edge-crossing
+        test and (Polygons only) the part-shell-vertex-inside test run as
+        one vectorized pass over the geometries whose bbox overlaps the
+        part and whose id no earlier test has found."""
+        kinds = np.asarray(kinds, np.int64)
+        voff = np.asarray(voff, np.int64)
+        xs = np.asarray(xs, np.float64)
+        ys = np.asarray(ys, np.float64)
+        g = kinds.size
+        nv = max(len(self.id_vocab), 1)
+        vc = np.diff(voff)
+        offsets, codes, _ = self.join_points_codes(xs, ys)
+        vertex = np.repeat(np.arange(xs.size), np.diff(offsets))
+        found = np.unique(np.repeat(np.arange(g), vc)[vertex] * nv + codes)
+        ext = np.flatnonzero((kinds != 1) & (vc > 0))
+        if ext.size and self.ids:
+            nz = np.flatnonzero(vc > 0)
+            at = np.searchsorted(nz, ext)
+            gx0 = np.minimum.reduceat(xs[:voff[-1]], voff[nz])[at]
+            gy0 = np.minimum.reduceat(ys[:voff[-1]], voff[nz])[at]
+            gx1 = np.maximum.reduceat(xs[:voff[-1]], voff[nz])[at]
+            gy1 = np.maximum.reduceat(ys[:voff[-1]], voff[nz])[at]
+            for pi, b in enumerate(self.boxes):
+                code = self.part_codes[pi]
+                cand = ext[(gx1 >= b[0]) & (gx0 <= b[2]) & (gy1 >= b[1]) & (gy0 <= b[3])]
+                cand = cand[~np.isin(cand * nv + code, found)]
+                if not cand.size:
+                    continue
+                hit = self._edges_cross_many(cand, voff, xs, ys, self.rings[pi])
+                poly = np.flatnonzero(~hit & (kinds[cand] == 3))
+                if poly.size:
+                    sx, sy = self.rings[pi][0]
+                    hit[poly] = _shell_inside_many(cand[poly], voff, xs, ys, sx, sy)
+                found = np.union1d(found, cand[hit] * nv + code)
+        return _csr_of_keys(found, g, nv) + (self.id_vocab,)
+
+    @staticmethod
+    def _edges_cross_many(geoms, voff, xs, ys, part_rings) -> np.ndarray:
+        """Per geometry of `geoms`: any of its edges crosses or touches an
+        edge of `part_rings` (_edges_cross, one pass over all of them)."""
+        bx1 = np.concatenate([rx[:-1] for rx, _ in part_rings])
+        by1 = np.concatenate([ry[:-1] for _, ry in part_rings])
+        bx2 = np.concatenate([rx[1:] for rx, _ in part_rings])
+        by2 = np.concatenate([ry[1:] for _, ry in part_rings])
+        hit = np.zeros(geoms.size, bool)
+        for sub, e, owner in _edge_chunks(geoms, voff, max(bx1.size, 1)):
+            ehit = _edges_hit(xs[e], ys[e], xs[e + 1], ys[e + 1], bx1, by1, bx2, by2)
+            hit[sub[owner[ehit]]] = True
+        return hit
 
     def join_geom(self, kind: str, data) -> list[str]:
         """Sorted id set for one geometry (JTS `intersects` analog, J4).
@@ -263,42 +322,94 @@ class PolygonIndex:
     @staticmethod
     def _edges_cross(rings: list[np.ndarray], part_rings) -> bool:
         for arr in rings:
-            ax1, ay1 = arr[:-1, 0], arr[:-1, 1]
-            ax2, ay2 = arr[1:, 0], arr[1:, 1]
             for rx, ry in part_rings:
-                bx1, by1 = rx[:-1], ry[:-1]
-                bx2, by2 = rx[1:], ry[1:]
-                # vectorized proper-crossing test over the (A,B) edge grid
-                d1 = (ax2[:, None] - ax1[:, None]) * (by1[None, :] - ay1[:, None]) - (
-                    ay2[:, None] - ay1[:, None]
-                ) * (bx1[None, :] - ax1[:, None])
-                d2 = (ax2[:, None] - ax1[:, None]) * (by2[None, :] - ay1[:, None]) - (
-                    ay2[:, None] - ay1[:, None]
-                ) * (bx2[None, :] - ax1[:, None])
-                d3 = (bx2[None, :] - bx1[None, :]) * (ay1[:, None] - by1[None, :]) - (
-                    by2[None, :] - by1[None, :]
-                ) * (ax1[:, None] - bx1[None, :])
-                d4 = (bx2[None, :] - bx1[None, :]) * (ay2[:, None] - by1[None, :]) - (
-                    by2[None, :] - by1[None, :]
-                ) * (ax2[:, None] - bx1[None, :])
-                cross = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-                if cross.any():
+                hit = _edges_hit(
+                    arr[:-1, 0], arr[:-1, 1], arr[1:, 0], arr[1:, 1],
+                    rx[:-1], ry[:-1], rx[1:], ry[1:],
+                )
+                if hit.any():
                     return True
-                touch = (d1 == 0) | (d2 == 0) | (d3 == 0) | (d4 == 0)
-                if touch.any():
-                    # exact-touch check over ALL flagged pairs, vectorized
-                    # elementwise (no truncation — a touch past any cap
-                    # would silently drop a country hit)
-                    ii, jj = np.nonzero(touch)
-                    a1x, a1y, a2x, a2y = ax1[ii], ay1[ii], ax2[ii], ay2[ii]
-                    b1x, b1y, b2x, b2y = bx1[jj], by1[jj], bx2[jj], by2[jj]
-                    if (
-                        _on_segment(b1x, b1y, a1x, a1y, a2x, a2y).any()
-                        or _on_segment(b2x, b2y, a1x, a1y, a2x, a2y).any()
-                        or _on_segment(a1x, a1y, b1x, b1y, b2x, b2y).any()
-                    ):
-                        return True
         return False
+
+
+def _edges_hit(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2) -> np.ndarray:
+    """Per A edge: it properly crosses, or exactly touches, any B edge."""
+    # vectorized proper-crossing test over the (A,B) edge grid
+    d1 = (ax2[:, None] - ax1[:, None]) * (by1[None, :] - ay1[:, None]) - (
+        ay2[:, None] - ay1[:, None]
+    ) * (bx1[None, :] - ax1[:, None])
+    d2 = (ax2[:, None] - ax1[:, None]) * (by2[None, :] - ay1[:, None]) - (
+        ay2[:, None] - ay1[:, None]
+    ) * (bx2[None, :] - ax1[:, None])
+    d3 = (bx2[None, :] - bx1[None, :]) * (ay1[:, None] - by1[None, :]) - (
+        by2[None, :] - by1[None, :]
+    ) * (ax1[:, None] - bx1[None, :])
+    d4 = (bx2[None, :] - bx1[None, :]) * (ay2[:, None] - by1[None, :]) - (
+        by2[None, :] - by1[None, :]
+    ) * (ax2[:, None] - bx1[None, :])
+    hit = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))).any(axis=1)
+    touch = (d1 == 0) | (d2 == 0) | (d3 == 0) | (d4 == 0)
+    # exact-touch check over ALL flagged pairs, vectorized elementwise (no
+    # truncation — a touch past any cap would silently drop a country hit)
+    ii, jj = np.nonzero(touch & ~hit[:, None])
+    if ii.size:
+        a1x, a1y, a2x, a2y = ax1[ii], ay1[ii], ax2[ii], ay2[ii]
+        b1x, b1y, b2x, b2y = bx1[jj], by1[jj], bx2[jj], by2[jj]
+        on = (
+            _on_segment(b1x, b1y, a1x, a1y, a2x, a2y)
+            | _on_segment(b2x, b2y, a1x, a1y, a2x, a2y)
+            | _on_segment(a1x, a1y, b1x, b1y, b2x, b2y)
+        )
+        hit[ii[on]] = True
+    return hit
+
+
+def _shell_inside_many(geoms, voff, xs, ys, sx, sy) -> np.ndarray:
+    """Per closed-ring geometry of `geoms`: any of the points (sx, sy) is
+    inside or on it (gnp.points_in_polygon with one ring, the same float
+    expressions, one pass over all of them)."""
+    hit = np.zeros(geoms.size, bool)
+    px = sx[None, :]
+    py = sy[None, :]
+    for sub, e, owner in _edge_chunks(geoms, voff, max(sx.size, 1)):
+        x1 = xs[e][:, None]
+        y1 = ys[e][:, None]
+        x2 = xs[e + 1][:, None]
+        y2 = ys[e + 1][:, None]
+        cond = (y1 <= py) != (y2 <= py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+        crossings = (cond & (px < xint)).astype(np.int64)
+        on = ((x2 - x1) * (py - y1) - (y2 - y1) * (px - x1) == 0.0) & (
+            (px >= np.minimum(x1, x2))
+            & (px <= np.maximum(x1, x2))
+            & (py >= np.minimum(y1, y2))
+            & (py <= np.maximum(y1, y2))
+        )
+        first = np.flatnonzero(np.r_[True, owner[1:] != owner[:-1]])
+        inside = (np.add.reduceat(crossings, first) % 2).astype(bool)
+        inside |= np.logical_or.reduceat(on, first)
+        hit[sub[owner[first]]] = inside.any(axis=1)
+    return hit
+
+
+def _edge_chunks(geoms, voff, width: int, cells: int = 1 << 20):
+    """(geoms, edge start vertexes, owning position) in chunks of whole
+    geometries with about `cells` (edge × width) grid cells each; geometries
+    with no edge are left out."""
+    cnt = np.maximum(voff[geoms + 1] - voff[geoms] - 1, 0)
+    keep = np.flatnonzero(cnt)
+    cend = np.cumsum(cnt[keep])
+    rows = max(cells // width, 1)
+    lo = 0
+    while lo < keep.size:
+        done = cend[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(cend, done + rows, "right")), lo + 1)
+        sel = keep[lo:hi]
+        c = cnt[sel]
+        e = np.repeat(voff[geoms[sel]], c) + gnp.segment_ranges(c)
+        yield sel, e, np.repeat(np.arange(sel.size), c)
+        lo = hi
 
 
 def _on_segment(px, py, x1, y1, x2, y2) -> np.ndarray:
@@ -311,6 +422,14 @@ def _on_segment(px, py, x1, y1, x2, y2) -> np.ndarray:
         & (py >= np.minimum(y1, y2))
         & (py <= np.maximum(y1, y2))
     )
+
+
+def _csr_of_keys(key: np.ndarray, n: int, nv: int) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, codes) of sorted unique `row * nv + code` keys over n rows."""
+    row = key // nv
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(np.bincount(row, minlength=n), out=offsets[1:])
+    return offsets, key - row * nv
 
 
 def _csr(rows: list) -> tuple[np.ndarray, np.ndarray]:

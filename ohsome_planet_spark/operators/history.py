@@ -48,6 +48,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1016,7 +1018,9 @@ def way_contributions(ways: DataFrame, nodes: DataFrame, country_index=None) -> 
 
     Delegates to `history_arrow.way_contributions_arrow`: same logical plan
     and output as the dict twin below (`way_contributions_dict`), but the
-    partition kernel is zero-dict/zero-pandas — see history_arrow.py.
+    partition kernel is zero-dict/zero-pandas and joins every geometry of
+    its partition to the broadcast country index in one batched call —
+    see history_arrow.py.
     """
     from .history_arrow import way_contributions_arrow
 
@@ -1183,12 +1187,17 @@ def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
     """Node contribution view (the TransformerNodes path) — DECLARATIVE.
 
     Nodes have no members, so the priority-queue merge degenerates and the
-    whole converter is window functions + vectorized kernels: run collapse
-    via lead(), raw-neighbor validity/last-edit via lag()/lead(), geometry
-    carry-forward via last_value(IGNORE NULLS), point WKB / XZ2 / countries
-    via the existing Arrow kernels. Zero per-row Python — on a planet-scale
-    run nodes are ~90% of the entities, so this path staying whole-stage-
-    codegen'd is THE throughput lever (measured ~10× over the kernel).
+    whole converter is window functions + one vectorized kernel: run
+    collapse via lead(), raw-neighbor validity/last-edit via lag()/lead(),
+    geometry carry-forward via last_value(IGNORE NULLS), then point WKB,
+    countries and XZ2 in ONE Arrow kernel (`node_point_kernel`), the plan's
+    only Python evaluation. All windows share one exchange on id, which
+    AQE may coalesce: the kernel is a cheap vectorized pass, and pinning
+    the exchange to `kernel_partitions` measured slower end to end (more
+    tasks and Python workers for the same work). No per-row Python — on a
+    planet-scale run nodes are ~90% of the entities, so this path staying
+    whole-stage-codegen'd is THE throughput lever (measured ~10× over the
+    kernel).
 
     `node_contributions_kernel` below is the original imperative twin,
     kept as the cross-check (tests assert row-identical output on
@@ -1203,8 +1212,7 @@ def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..plans.enrich import point_wkb_udf
-
+    spark = nodes.sparkSession
     w_raw = Window.partitionBy("id").orderBy("version", "ts")
     w_emit = Window.partitionBy("id").orderBy("version", "ts")
     w_carry = w_emit.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1316,11 +1324,12 @@ def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
         F.col("_valid_to").isNotNull(), F.lit("history")
     ).otherwise(F.lit("latest"))
     status = F.when(~F.col("_eff"), F.lit("invalid")).otherwise(base_status)
-    # the single Python eval of the plan, after every window: vectorized
-    # point-WKB assembly only for rows that actually carry a geometry
-    geometry = F.when(F.col("_eff"), point_wkb_udf(F.col("_glon"), F.col("_glat")))
+    # the single Python eval of the plan, after every window: geometry,
+    # countries and XZ2 of the carried point in one Arrow kernel
+    emitted = emitted.withColumn(
+        "_k", node_point_kernel(spark, country_index)("_eff", "_glon", "_glat"))
 
-    out = emitted.select(
+    return emitted.select(
         F.lit("node").alias("osm_type"),
         F.col("id").alias("osm_id"),
         F.col("version").cast("int").alias("osm_version"),
@@ -1337,35 +1346,71 @@ def node_contributions(nodes: DataFrame, country_index=None) -> DataFrame:
         status.alias("status"),
         contrib_type.alias("contrib_type"),
         F.lit("Point").alias("geometry_type"),
-        geometry.alias("geometry"),
+        F.col("_k.geometry").alias("geometry"),
         F.when(F.col("_eff"), F.col("_glon")).alias("xmin"),
         F.when(F.col("_eff"), F.col("_glat")).alias("ymin"),
         F.when(F.col("_eff"), F.col("_glon")).alias("xmax"),
         F.when(F.col("_eff"), F.col("_glat")).alias("ymax"),
         F.when(F.col("_eff"), F.col("_glon")).alias("centroid_x"),
         F.when(F.col("_eff"), F.col("_glat")).alias("centroid_y"),
-        F.lit(-1).alias("xz_level"),
-        F.lit(0).cast("long").alias("xz_code"),
-        F.lit(None).cast("array<string>").alias("countries"),
+        F.col("_k.xz_level").alias("xz_level"),
+        F.col("_k.xz_code").alias("xz_code"),
+        F.col("_k.countries").alias("countries"),
         F.lit(0.0).alias("area"),
         F.lit(0.0).alias("area_delta"),
         F.lit(0.0).alias("length"),
         F.lit(0.0).alias("length_delta"),
         F.array().cast("array<long>").alias("refs"),
     )
-    if country_index is not None:
-        from .spatial_join import countries_udf
 
-        udf = countries_udf(nodes.sparkSession, country_index)
-        out = out.withColumn(
-            "countries",
-            F.when(
-                F.col("geometry").isNotNull(), udf(F.col("centroid_x"), F.col("centroid_y"))
-            ).otherwise(F.array().cast("array<string>")),
-        )
-    else:
-        out = out.withColumn("countries", F.array().cast("array<string>"))
-    return with_xz2_from_bbox(out)
+
+def node_point_kernel(spark, country_index=None):
+    """Arrow UDF (eff, lon, lat) → struct<geometry, countries, xz_level,
+    xz_code> for node contributions: where eff holds, the point's WKB
+    (`plans.enrich.point_wkb_array`), its sorted country ids (one batched
+    join per Arrow batch over the broadcast index; [] without one) and its
+    XZ2 cell; elsewhere a null geometry, [] and (-1, 0), the
+    reference's invalid marker (`ContributionsAvroConverter.java:127`).
+
+    asNondeterministic: the kernel is pure, but the flag keeps the
+    optimizer from copying it into a filter pushed below the projection
+    (e.g. one on geometry or countries downstream) or into each field
+    reference of a collapsed projection, so the plan runs it once per row
+    (as for `spatial_join.countries_udf`)."""
+    from pyspark.sql.functions import arrow_udf
+
+    from ..plans.enrich import point_wkb_array
+    from .history_arrow import countries_column
+
+    bc = spark.sparkContext.broadcast(country_index) if country_index is not None else None
+
+    @arrow_udf(
+        "geometry binary, countries array<string>, xz_level int, xz_code long")
+    def point_kernel(eff: pa.Array, lon: pa.Array, lat: pa.Array) -> pa.Array:
+        e = eff.fill_null(False).to_numpy(zero_copy_only=False)
+        x = lon.to_numpy(zero_copy_only=False).astype(np.float64)
+        y = lat.to_numpy(zero_copy_only=False).astype(np.float64)
+        sel = np.flatnonzero(e)
+        geometry = pc.if_else(
+            pa.array(e), point_wkb_array(x, y, e), pa.scalar(None, pa.binary()))
+        if bc is None:
+            countries = pa.ListArray.from_arrays(
+                np.zeros(e.size + 1, np.int32), pa.array([], pa.string()))
+        else:
+            which = np.full(e.size, -1, np.int64)
+            which[sel] = np.arange(sel.size)
+            countries = countries_column(
+                bc.value, np.ones(sel.size, np.int64), np.arange(sel.size + 1),
+                x[sel], y[sel], which)
+        level = np.full(e.size, -1, np.int32)
+        code = np.zeros(e.size, np.int64)
+        if sel.size:
+            level[sel], code[sel] = xz2_code(x[sel], y[sel], x[sel], y[sel])
+        return pa.StructArray.from_arrays(
+            [geometry, countries, pa.array(level), pa.array(code)],
+            names=["geometry", "countries", "xz_level", "xz_code"])
+
+    return point_kernel.asNondeterministic()
 
 
 def node_contributions_kernel(nodes: DataFrame, country_index=None) -> DataFrame:
@@ -2184,11 +2229,37 @@ def relation_contributions(
     Member routing: relation → member way ids → way histories; way refs ∪
     direct node members → node histories; all shuffled to the relation id
     and merged in one kernel (the reference's two-level multiGet,
-    `Contributions2Parquet.processRelation:233-266`).
+    `Contributions2Parquet.processRelation:233-266`). The kernel
+    (`relation_arrow.relation_partition_table`) takes the broadcast country
+    index itself.
     """
     spark = relations.sparkSession
     bc = spark.sparkContext.broadcast(country_index) if country_index is not None else None
+    all_packed = relation_packed(relations, ways, nodes)
 
+    def partition_fn(batches):
+        from .relation_arrow import relation_partition_table
+
+        batch_list = list(batches)
+        if not batch_list:
+            return
+        out = relation_partition_table(
+            pa.Table.from_batches(batch_list),
+            bc.value if bc is not None else None)
+        if out is None:
+            return
+        step = 1 << 16
+        for off in range(0, out.num_rows, step):
+            yield out.slice(off, step)
+
+    return all_packed.mapInArrow(partition_fn, REL_CONTRIB_SCHEMA)
+
+
+def relation_packed(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The relation kernel's input: relations ∪ their member way and node
+    histories, one hash exchange on rel_id, each partition sorted for
+    `relation_arrow.relation_partition_table`."""
+    spark = relations.sparkSession
     rel_way_ids = relations.select(
         F.col("id").alias("rel_id"),
         F.explode(F.filter("members", lambda m: m.type == "way")).alias("m"),
@@ -2252,48 +2323,22 @@ def relation_contributions(
 
     # explicit partition count: exempt from AQE post-shuffle coalescing,
     # which would serialize the compute-bound Python kernel on small-byte
-    # inputs (see the note in history_arrow.way_contributions_arrow; count
+    # inputs (see the note in history_arrow.way_packed; count
     # rationale in session.kernel_partitions — one wave of cores)
     from ohsome_planet_spark.session import kernel_partitions
 
-    nparts = kernel_partitions(spark)
-    all_packed = (
+    return (
         members_packed.withColumn(
             "rel_member_list",
             F.lit(None).cast("array<struct<type:string, id:long, role:string>>"),
         )
         .unionByName(rels_packed)
-        .repartition(nparts, "rel_id")
+        .repartition(kernel_partitions(spark), "rel_id")
         # kind literals sort node < rel < way — the order the stream
         # collector expects; sorting JVM-side keeps the Python kernel a
-        # pure array pass (same pattern as way_contributions_arrow)
+        # pure array pass (same pattern as history_arrow.way_packed)
         .sortWithinPartitions("rel_id", "kind", "member_id", "version", "ts")
     )
-
-    def partition_fn(batches):
-        import pyarrow as pa
-
-        from .relation_arrow import relation_partition_table
-
-        joiner = None
-        if bc is not None:
-            idx = bc.value
-
-            def joiner(geom_t):
-                return idx.join_geom(geom_t[0], geom_t[1])
-
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        out = relation_partition_table(
-            pa.Table.from_batches(batch_list), joiner)
-        if out is None:
-            return
-        step = 1 << 16
-        for off in range(0, out.num_rows, step):
-            yield out.slice(off, step)
-
-    return all_packed.mapInArrow(partition_fn, REL_CONTRIB_SCHEMA)
 
 
 def _relation_partition_kernel(pdf: pd.DataFrame, joiner=None):

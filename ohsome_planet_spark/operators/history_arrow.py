@@ -25,7 +25,10 @@ reference's `ContributionsEntity.computeNext`
   tags/tags_before/refs/user are `take`s from the INPUT columns, the small
   categorical columns (status, contrib_type, geometry_type) are dictionary
   `take`s. XZ2 codes are computed in-kernel from the request bboxes, so
-  the separate post-pass Arrow round-trip disappears.
+  the separate post-pass Arrow round-trip disappears;
+* the countries column is one `PolygonIndex.join_geoms_codes` call over
+  every geometry request of the partition, gathered per row from its CSR
+  output (`countries_column`) — no per-geometry join calls.
 
 The dict kernel stays as the cross-check twin; tests/test_history_arrow.py
 asserts row equality between the two on adversarial fixtures.
@@ -38,6 +41,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..functions.cells import xz2_code
+from ..functions.geometry_np import segment_ranges
 from ..functions.waygeom import is_area
 from .history import (
     CONTRIB_SCHEMA,
@@ -45,7 +49,6 @@ from .history import (
     VALID_TO_SENTINEL_NS,
     _CS_MAX,
     _MinQueue,
-    _request_geom_tuple,
     batch_geometries,
 )
 
@@ -262,15 +265,6 @@ def _minor_node_keep_mask(node_rows, seg_new, nv, nlon, nlat) -> np.ndarray:
     return keep_mask
 
 
-def _ranges(counts: np.ndarray) -> np.ndarray:
-    """[0..c0), [0..c1), ... concatenated."""
-    total = int(counts.sum())
-    if not total:
-        return np.zeros(0, np.int64)
-    csum = np.concatenate([[0], np.cumsum(counts[:-1])])
-    return np.arange(total) - np.repeat(csum, counts)
-
-
 def _dict_take(values: list[str], codes: np.ndarray,
                mask: np.ndarray | None = None) -> pa.Array:
     """Small-dictionary string column: C++ take of per-row codes."""
@@ -278,12 +272,30 @@ def _dict_take(values: list[str], codes: np.ndarray,
     return pa.array(values, type=pa.string()).take(idx)
 
 
-def way_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
+def countries_column(index, kinds, voff, xs, ys, which: np.ndarray) -> pa.ListArray:
+    """Row i's countries: the ids `index.join_geoms_codes` finds for
+    geometry which[i] (kinds/voff/xs/ys as that method takes them), or []
+    where which[i] < 0. One batched join for all geometries, then one
+    CSR gather — no per-row or per-geometry Python."""
+    offsets, codes, ids = index.join_geoms_codes(kinds, voff, xs, ys)
+    has = which >= 0
+    lens = np.zeros(which.size, np.int64)
+    lens[has] = offsets[which[has] + 1] - offsets[which[has]]
+    starts = np.zeros(which.size, np.int64)
+    starts[has] = offsets[which[has]]
+    values = codes[np.repeat(starts, lens) + segment_ranges(lens)]
+    row_off = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+    return pa.ListArray.from_arrays(
+        pa.array(row_off), pa.array(ids, pa.string()).take(pa.array(values)))
+
+
+def way_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
     """One partition of the way merge, Arrow in → Arrow out.
 
     tbl must be sorted by (way_id, kind, node_id, version, ts) — the plan
-    does this JVM-side with sortWithinPartitions. joiner: optional
-    (kind_name, data) -> list[str] country join (broadcast PIP index).
+    does this JVM-side with sortWithinPartitions. index: optional
+    broadcast `PolygonIndex`; every geometry of the partition goes through
+    one `join_geoms_codes` call for the countries column.
     """
     n = tbl.num_rows
     if not n:
@@ -456,7 +468,7 @@ def way_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
     req_rows = np.nonzero(rvis[K])[0]
     rk = K[req_rows]
     counts = rnref[rk]
-    flat_idx = np.repeat(moff[rk], counts) + _ranges(counts)
+    flat_idx = np.repeat(moff[rk], counts) + segment_ranges(counts)
     gmem = mem[flat_idx] if flat_idx.size else np.zeros(0, np.int64)
     okm = gmem >= 0
     gsafe = np.where(okm, gmem, 0)
@@ -546,23 +558,13 @@ def way_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
         xz_lvl = np.where(nonempty, lv_all[eff_c], -1).astype(np.int32)
         xz_cod = np.where(nonempty, cd_all[eff_c], 0)
 
-    if joiner is None:
+    if index is None:
         countries_col = pa.ListArray.from_arrays(
             np.zeros(nk + 1, np.int32), pa.array([], type=pa.string()))
     else:
-        cache: dict[int, list] = {}
-        rows_c: list[list] = []
-        for i in range(nk):
-            r = int(eff_req[i]) if nonempty[i] else -1
-            if r < 0:
-                rows_c.append([])
-                continue
-            hit = cache.get(r)
-            if hit is None:
-                kname, data = _request_geom_tuple(geo, r)
-                hit = cache[r] = joiner(kname, data)
-            rows_c.append(hit)
-        countries_col = pa.array(rows_c, type=pa.list_(pa.string()))
+        countries_col = countries_column(
+            index, geo["kind"], geo["voff"], geo["xs"], geo["ys"],
+            np.where(nonempty, eff_req, -1))
 
     # map/list/string columns: C++ takes from the INPUT arrays; the
     # appended sentinel row supplies the {} fill for null/absent maps
@@ -624,15 +626,38 @@ def way_contributions_arrow(ways, nodes, country_index=None):
     Same logical plan as the dict twin (explode refs → member join → union
     → one hash exchange on way_id) but the partition sort happens JVM-side
     (sortWithinPartitions) and the kernel is `way_partition_table`:
-    Arrow in, Arrow out, no pandas materialization and no post-pass XZ2
-    round trip.
+    Arrow in, Arrow out, no pandas materialization, no post-pass XZ2
+    round trip, and the broadcast country index handed to the kernel.
     """
-    from pyspark.sql import functions as F
-
     spark = ways.sparkSession
     bc = (spark.sparkContext.broadcast(country_index)
           if country_index is not None else None)
+    packed = way_packed(ways, nodes)
 
+    def partition_fn(batches):
+        batch_list = list(batches)
+        if not batch_list:
+            return
+        out = way_partition_table(
+            pa.Table.from_batches(batch_list),
+            bc.value if bc is not None else None)
+        if out is None:
+            return
+        # bounded batch sizes for the downstream consumers
+        step = 1 << 16
+        for off in range(0, out.num_rows, step):
+            yield out.slice(off, step)
+
+    return packed.mapInArrow(partition_fn, CONTRIB_SCHEMA)
+
+
+def way_packed(ways, nodes):
+    """The way kernel's input: ways ∪ their member node histories, one
+    hash exchange on way_id, each partition sorted for
+    `way_partition_table`."""
+    from pyspark.sql import functions as F
+
+    spark = ways.sparkSession
     refs_pairs = ways.select(
         F.col("id").alias("way_id"), F.explode("refs").alias("node_id")
     ).distinct()
@@ -672,30 +697,8 @@ def way_contributions_arrow(ways, nodes, country_index=None):
     # session.kernel_partitions.)
     from ohsome_planet_spark.session import kernel_partitions
 
-    packed = (
+    return (
         ways_packed.unionByName(nodes_packed)
         .repartition(kernel_partitions(spark), "way_id")
         .sortWithinPartitions("way_id", "kind", "node_id", "version", "ts")
     )
-
-    def partition_fn(batches):
-        joiner = None
-        if bc is not None:
-            idx = bc.value
-
-            def joiner(kind, data):
-                return idx.join_geom(kind, data)
-
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        out = way_partition_table(
-            pa.Table.from_batches(batch_list), joiner)
-        if out is None:
-            return
-        # bounded batch sizes for the downstream consumers
-        step = 1 << 16
-        for off in range(0, out.num_rows, step):
-            yield out.slice(off, step)
-
-    return packed.mapInArrow(partition_fn, CONTRIB_SCHEMA)

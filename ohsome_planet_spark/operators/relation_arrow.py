@@ -25,9 +25,11 @@ Two output paths share the stream-collection phase (`_collect_streams`):
   GeometryCollection bbox/centroid folds (reduceat over encoded member
   positions — float-identical to `_combine_centroid`'s sequential +=),
   envelope WKB, XZ2 codes, and the per-member geometry list columns are
-  all NumPy/Arrow-kernel work; only the MultiPolygon assembly
-  (`mpbuild`, inherently iterative ring-joining) and the optional country
-  join remain per-row Python. No pandas materialization anywhere.
+  all NumPy/Arrow-kernel work, and so is the GeometryCollection country
+  join (one `PolygonIndex.join_geoms_codes` call per partition); only
+  the MultiPolygon assembly (`mpbuild`, inherently iterative
+  ring-joining) and its per-polygon country join remain per-row Python.
+  No pandas materialization anywhere.
 * `relation_partition_kernel` (pandas in/out): the original round-4 path,
   kept as the cross-check twin feeding the UNCHANGED
   `convert_relation_contributions` converter.
@@ -46,6 +48,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..functions import geometry_np as gnp
+from ..functions.geometry_np import segment_ranges
 from ..functions import geodesy as gd
 from ..functions.cells import xz2_code
 from ..functions.waygeom import is_area
@@ -65,7 +68,6 @@ from .history_arrow import (
     _dict_take,
     _merge_walk,
     _minor_node_keep_mask,
-    _ranges,
     _MAP,
     _TS,
 )
@@ -532,17 +534,20 @@ def _finalize_rows(out_rows: list[dict]):
     return pdf_out
 
 
-def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | None:
+def relation_partition_table(tbl: pa.Table, index=None) -> pa.RecordBatch | None:
     """One partition of the relation merge, Arrow in → Arrow out.
 
     tbl must be sorted by (rel_id, kind, member_id, version, ts) — the plan
     does this JVM-side with sortWithinPartitions (kind literals sort
     node < rel < way, the order the stream collector expects).
-    joiner: optional one-tuple (kind, data, wkb) -> list[str] country join.
+    index: optional broadcast `PolygonIndex` for the countries column —
+    the GeometryCollection rows of the partition share one
+    `join_geoms_codes` call, MultiPolygon rows call `join_geom` per
+    polygon.
 
     Semantics are `convert_relation_contributions` verbatim, re-expressed
     as whole-partition array work (see the module docstring); the only
-    per-row Python left is MultiPolygon ring assembly and the country
+    per-row Python left is MultiPolygon ring assembly and its country
     join. Float doctrine: the GeometryCollection centroid folds run
     np.add.reduceat over per-member moment columns in member order —
     reduceat is a sequential left fold, so every sum associates exactly
@@ -767,7 +772,7 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
     # ----- member slices of the EMITTED rows
     counts_k = rml_len[K]
     moffs = np.concatenate([[0], np.cumsum(counts_k)])
-    flat_idx = (np.repeat(rl_off[K], counts_k) + _ranges(counts_k)
+    flat_idx = (np.repeat(rl_off[K], counts_k) + segment_ranges(counts_k)
                 if moffs[-1] else np.zeros(0, np.int64))
     enc = rl_mem_a[flat_idx] if flat_idx.size else np.zeros(0, np.int64)
     enc_ok = enc >= 0
@@ -880,22 +885,30 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
         from .history import _envelope_geom
         info_wkb[i] = wkb_dumps(_envelope_geom(
             (own_xmin[i], own_ymin[i], own_xmax[i], own_ymax[i])))
-        if joiner is not None:
-            hits: set = set()
-            s0, e0 = int(moffs[i]), int(moffs[i + 1])
-            for p in range(s0, e0):
-                ec = int(enc[p])
-                if ec < 0 or not pos_valid[ec]:
-                    continue
-                if ec < n:
-                    hits.update(joiner(
-                        ("Point", (float(lon_np[ec]), float(lat_np[ec])), b"")))
-                else:
-                    jj = ec - n
-                    for q in range(int(gvoff[jj]), int(gvoff[jj + 1])):
-                        hits.update(joiner(
-                            ("Point", (float(gxs[q]), float(gys[q])), b"")))
-            info_countries[i] = sorted(hits)
+    gc_has = gc_rows[own_has[gc_rows]]
+    if index is not None and gc_has.size:
+        # a GeometryCollection's countries are those of its valid members'
+        # vertices: one point set per row, one batched join for all rows
+        in_gc = np.zeros(nk, bool)
+        in_gc[gc_has] = True
+        members = comp[in_gc[row_of[comp]]]
+        ec = enc[members]
+        way = ec >= n
+        start = ec.copy()  # into the node coords ++ way vertex coords
+        cnt = np.ones(ec.size, np.int64)
+        jj = ec[way] - n
+        start[way] = n + gvoff[jj]
+        cnt[way] = gvoff[jj + 1] - gvoff[jj]
+        vert = np.repeat(start, cnt) + segment_ranges(cnt)
+        per_row = np.bincount(np.repeat(row_of[members], cnt), minlength=nk)
+        off, codes, ids = index.join_geoms_codes(
+            np.ones(gc_has.size, np.int64),
+            np.concatenate([[0], np.cumsum(per_row[gc_has])]),
+            np.concatenate([lon_np, gxs])[vert],
+            np.concatenate([lat_np, gys])[vert])
+        names = [ids[c] for c in codes.tolist()]
+        for k, i in enumerate(gc_has.tolist()):
+            info_countries[i] = names[off[k]:off[k + 1]]
 
     mp_rows = np.nonzero(is_mp_row)[0]
     if mp_rows.size:
@@ -954,10 +967,10 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
                 )
                 for rings in data
             )
-            if joiner is not None:
+            if index is not None:
                 hits = set()
                 for rings in data:
-                    hits.update(joiner(("Polygon", list(rings), b"")))
+                    hits.update(index.join_geom("Polygon", list(rings)))
                 info_countries[i] = sorted(hits)
 
     # ----- carry-forward chain (deleted rows reuse the previous info)
@@ -1017,7 +1030,7 @@ def relation_partition_table(tbl: pa.Table, joiner=None) -> pa.RecordBatch | Non
     geometry_col = pa.array(
         [info_wkb[int(eff[i])] if info_ok[i] else None for i in range(nk)],
         type=pa.binary())
-    if joiner is None:
+    if index is None:
         countries_col = pa.ListArray.from_arrays(
             np.zeros(nk + 1, np.int32), pa.array([], type=pa.string()))
     else:

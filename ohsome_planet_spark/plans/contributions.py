@@ -63,9 +63,11 @@ def contributions(
     node table feeds THREE pipeline branches (its own, the way member join,
     the relation transitive join) — without materialization each branch
     re-decodes every PBF blob. With a scratch dir the blobs decode exactly
-    once into columnar parquet (the Spark analog of the reference's single
-    PBF pass into its RocksDB stores, `Contributions2Parquet.java:98-112`)
-    and every downstream branch gets pruned, pushdown-friendly scans.
+    once, in one Spark job, into columnar parquet
+    (`sources.pbf.write_entity_scratch`: the Spark analog of the
+    reference's single PBF pass into its RocksDB stores,
+    `Contributions2Parquet.java:98-112`) and every downstream branch gets
+    pruned, pushdown-friendly scans.
     Recommended for anything bigger than a fixture.
 
     bucket_entities: when > 0 (and entity_scratch is set), the scratch
@@ -79,9 +81,10 @@ def contributions(
     bucket per final task, 2-4× total cores).
     """
     from ..operators.spatial_join import build_index
-    from ..sources.pbf import read_osm_pbf
+    from ..sources.pbf import read_entity_scratch, read_osm_pbf, write_entity_scratch
 
-    _, nodes, ways, rels = read_osm_pbf(spark, pbf_path)
+    if entity_scratch is None or bucket_entities > 0:
+        _, nodes, ways, rels = read_osm_pbf(spark, pbf_path)
     if entity_scratch is not None:
         scratch = Path(entity_scratch)
         if bucket_entities > 0:
@@ -111,11 +114,8 @@ def contributions(
             rels.write.mode("overwrite").parquet(str(scratch / "relations"))
             rels = spark.read.parquet(str(scratch / "relations"))
         else:
-            for name, df in (("nodes", nodes), ("ways", ways), ("relations", rels)):
-                df.write.mode("overwrite").parquet(str(scratch / name))
-            nodes = spark.read.parquet(str(scratch / "nodes"))
-            ways = spark.read.parquet(str(scratch / "ways"))
-            rels = spark.read.parquet(str(scratch / "relations"))
+            write_entity_scratch(spark, pbf_path, scratch)
+            nodes, ways, rels = read_entity_scratch(spark, scratch)
     index = build_index(country_features) if country_features is not None else None
 
     def entity_filter(df: DataFrame, relation: bool = False) -> DataFrame:

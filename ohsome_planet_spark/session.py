@@ -67,7 +67,7 @@ def get_spark(
 def kernel_partitions(spark: SparkSession) -> int:
     """Partition count for a compute-bound Python/Arrow kernel stage (the
     way/relation merge kernels, the imperative node twin, the gazetteer
-    enrichment kernel).
+    enrichment kernel; the PBF blob tasks take at most this many).
 
     Those stages use explicit repartition(n, key) to stay exempt from AQE
     post-shuffle coalescing (AQE targets shuffle BYTES and would serialize a

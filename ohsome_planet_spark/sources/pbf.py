@@ -1,17 +1,26 @@
-"""OSM PBF source: distributed blob-parallel scan (SURVEY §2.1 S1–S7).
+"""OSM PBF source: distributed blob-parallel Arrow scan (SURVEY §2.1 S1–S7).
 
 A from-scratch reader for the OSM PBF format (the public format spec:
 https://wiki.openstreetmap.org/wiki/PBF_Format), structured the Spark way:
 
 - S1/S2: the driver scans ONLY the blob framing (4-byte length + BlobHeader)
   to enumerate (offset, size, type) without touching blob payloads — the
-  analog of `OSMPbf.blobs()` (`/root/reference/osm-pbf/src/main/java/org/
-  heigit/ohsome/osm/pbf/OSMPbf.java:107-114`);
-- S3: blob list is partitioned per entity type (the PBF sort contract —
-  one entity type per block) and pruned by requested type;
-- S4–S7: each Spark task decodes its own blobs (zlib + protobuf + delta/
-  string-table decoding) and emits Arrow batches — blobs are the input
-  splits, so the scan parallelizes like any file source.
+  analog of `OSMPbf.blobs()` (reference `osm-pbf/src/main/java/org/heigit/
+  ohsome/osm/pbf/OSMPbf.java:107-114`);
+- S3: blobs are the input splits, dealt round-robin onto one wave of
+  tasks (`_blob_tasks`); a PBF does not say which entity type a blob holds,
+  so every blob is read, but each PrimitiveGroup holds one type and
+  `decode_primitive_block` skips the groups of types it was not asked for;
+- S4–S7: each task decodes its blobs (zlib + protobuf) straight into Arrow
+  record batches: the field walk over the block is Python, but every
+  packed field (ids, coordinates, dense info, tag and member string ids,
+  way refs) is varint/zigzag/delta-decoded by NumPy over the whole block,
+  and strings are C++ `take`s from the block's string table — no per-row
+  Python objects, and batches reach the JVM through `mapInArrow`.
+
+`read_osm_pbf` gives one frame per entity type; `write_entity_scratch`
+decodes each blob once for all three types and writes them as parquet in
+ONE Spark job (the contributions job's entity scratch).
 
 The protobuf wire codec here is minimal and hand-rolled (varint, zigzag,
 packed fields) — the format is stable and tiny. The test fixture writer
@@ -26,7 +35,32 @@ import struct
 import zlib
 from pathlib import Path
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.geometry_np import segment_ranges
+
+ENTITY_TYPES = ("nodes", "ways", "relations")
+# PrimitiveGroup field of each entity type (dense nodes; plain nodes,
+# field 1, are not written by any current producer and are skipped)
+_GROUP_TYPE = {"nodes": 2, "ways": 3, "relations": 4}
+_MEMBER_TYPES = pa.array(["node", "way", "relation"])
+_TS = pa.timestamp("us")
+_MAP = pa.map_(pa.string(), pa.string())
+_ENTITY_FIELDS = [
+    ("id", pa.int64()), ("version", pa.int32()), ("ts", _TS),
+    ("changeset", pa.int64()), ("user_id", pa.int64()), ("user", pa.string()),
+    ("visible", pa.bool_()), ("tags", _MAP),
+]
+# Arrow twins of the Spark schemas below (timestamp without zone =
+# timestamp_ntz)
+ARROW_SCHEMAS = {
+    "nodes": pa.schema(_ENTITY_FIELDS + [("lon", pa.float64()), ("lat", pa.float64())]),
+    "ways": pa.schema(_ENTITY_FIELDS + [("refs", pa.list_(pa.int64()))]),
+    "relations": pa.schema(_ENTITY_FIELDS + [("members", pa.list_(pa.struct([
+        ("type", pa.string()), ("id", pa.int64()), ("role", pa.string())])))]),
+}
 
 # ---------------------------------------------------------------------------
 # protobuf wire primitives
@@ -72,24 +106,6 @@ def _iter_fields(buf: bytes):
             pos += 8
         else:
             raise ValueError(f"unsupported wire type {wt}")
-
-
-def _packed_varints(buf: bytes) -> list[int]:
-    out = []
-    pos = 0
-    while pos < len(buf):
-        v, pos = _read_varint(buf, pos)
-        out.append(v)
-    return out
-
-
-def _packed_sint_delta(buf: bytes) -> list[int]:
-    out = []
-    acc = 0
-    for v in _packed_varints(buf):
-        acc += _zigzag_decode(v)
-        out.append(acc)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -201,9 +217,19 @@ def decode_header_block(data: bytes) -> dict:
     return out
 
 
-def decode_primitive_block(data: bytes) -> dict:
-    """→ {'nodes': [...], 'ways': [...], 'relations': [...]} plain dicts."""
-    strings: list[str] = []
+def decode_primitive_block(
+    data: bytes, types: tuple[str, ...] = ENTITY_TYPES
+) -> dict[str, pa.Table]:
+    """→ {'nodes': table, 'ways': table, 'relations': table}, one Arrow
+    table per requested entity type (ARROW_SCHEMAS); groups of the other
+    types are skipped undecoded.
+
+    Every packed field (ids, coordinates, dense info, tag and member
+    string ids, way refs) is decoded by NumPy over the whole block, and
+    strings are C++ `take`s from the block's string table — the only
+    per-entity Python left is the field walk over each way/relation
+    message and its Info."""
+    strings: list[bytes] = []
     groups = []
     granularity = 100
     lat_off = 0
@@ -211,9 +237,7 @@ def decode_primitive_block(data: bytes) -> dict:
     date_gran = 1000
     for field, wt, val in _iter_fields(data):
         if field == 1:  # stringtable
-            for f2, _, v2 in _iter_fields(val):
-                if f2 == 1:
-                    strings.append(v2.decode("utf-8"))
+            strings = [v2 for f2, _, v2 in _iter_fields(val) if f2 == 1]
         elif field == 2:
             groups.append(val)
         elif field == 17:
@@ -224,139 +248,226 @@ def decode_primitive_block(data: bytes) -> dict:
             lat_off = val
         elif field == 20:
             lon_off = val
+    table = pa.array(strings, pa.binary()).cast(pa.string())
 
-    nodes, ways, relations = [], [], []
+    wanted = {_GROUP_TYPE[t]: t for t in types}
+    parts: dict[str, list] = {t: [] for t in types}
     for group in groups:
-        for field, wt, val in _iter_fields(group):
-            if field == 2:  # dense nodes
-                nodes.extend(
-                    _decode_dense(val, strings, granularity, lat_off, lon_off, date_gran)
-                )
-            elif field == 3:
-                ways.append(_decode_way(val, strings, date_gran))
-            elif field == 4:
-                relations.append(_decode_relation(val, strings, date_gran))
-    return {"nodes": nodes, "ways": ways, "relations": relations}
+        fields = _iter_fields(group)
+        first = next(fields, None)
+        if first is None or first[0] not in wanted:
+            continue  # one entity type per group: skip it whole
+        if first[0] == 2:
+            parts["nodes"].append(_decode_dense(
+                first[2], table, granularity, lat_off, lon_off, date_gran))
+        else:
+            msgs = [first[2]] + [v for f, _, v in fields if f == first[0]]
+            decode = _decode_ways if first[0] == 3 else _decode_relations
+            parts[wanted[first[0]]].append(decode(msgs, table, date_gran))
+    return {t: pa.Table.from_batches(parts[t], ARROW_SCHEMAS[t]) for t in types}
 
 
-def _decode_info(buf: bytes, strings: list[str], date_gran: int) -> dict:
-    info = {"version": 1, "ts_ms": None, "changeset": -1, "uid": -1, "user": "", "visible": True}
+def _varints(buf) -> np.ndarray:
+    """All varints of a packed field, as uint64."""
+    b = np.frombuffer(buf, np.uint8)
+    if not b.size:
+        return np.zeros(0, np.uint64)
+    ends = (b & 0x80) == 0
+    starts = np.concatenate([[0], np.flatnonzero(ends)[:-1] + 1])
+    group = np.concatenate([[0], np.cumsum(ends[:-1])])
+    shift = ((np.arange(b.size) - starts[group]) * 7).astype(np.uint64)
+    return np.bitwise_or.reduceat((b & 0x7F).astype(np.uint64) << shift, starts)
+
+
+def _zigzag(v: np.ndarray) -> np.ndarray:
+    return (v >> np.uint64(1)).astype(np.int64) ^ -(v & np.uint64(1)).astype(np.int64)
+
+
+def _int64(v: np.ndarray) -> np.ndarray:
+    """Plain protobuf int64/int32 varints (two's complement)."""
+    return v.view(np.int64)
+
+
+def _segments(bufs: list[bytes], decode) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, values): the packed fields `bufs` decoded in one pass;
+    message i's values are values[offsets[i]:offsets[i + 1]]."""
+    sizes = np.fromiter((len(b) for b in bufs), np.int64, len(bufs))
+    joined = np.frombuffer(b"".join(bufs), np.uint8)
+    ends = np.concatenate([[0], np.cumsum((joined & 0x80) == 0)])
+    offsets = ends[np.concatenate([[0], np.cumsum(sizes)])]
+    return offsets, decode(_varints(joined))
+
+
+def _delta_segments(offsets: np.ndarray, deltas: np.ndarray) -> np.ndarray:
+    """Undo per-message delta coding: a running sum restarted at each
+    message start."""
+    acc = np.cumsum(deltas)
+    before = np.concatenate([[0], acc])[offsets[:-1]]
+    return acc - np.repeat(before, np.diff(offsets))
+
+
+def _dense_tag_ends(kv: np.ndarray, n: int) -> np.ndarray:
+    """Index of each node's 0 terminator in a dense keys_vals array. A
+    terminator is a 0 in KEY position, so a 0 value (the empty string)
+    needs the sequential walk; the vectorized guess — every 0 ends a node
+    — is right exactly when every node's run has an even length."""
+    zeros = np.flatnonzero(kv == 0)
+    if zeros.size == n:
+        starts = np.concatenate([[0], zeros[:-1] + 1])
+        if not ((zeros - starts) % 2).any():
+            return zeros
+    ends = []
+    pos = 0
+    for _ in range(n):
+        while pos < kv.size and kv[pos] != 0:
+            pos += 2
+        ends.append(pos)
+        pos += 1
+    return np.asarray(ends, np.int64)
+
+
+def _string_map(key_ids, val_ids, offsets, table: pa.Array) -> pa.MapArray:
+    return pa.MapArray.from_arrays(
+        pa.array(offsets.astype(np.int32)),
+        table.take(pa.array(key_ids)), table.take(pa.array(val_ids)))
+
+
+def _decode_dense(buf, table, gran, lat_off, lon_off, date_gran) -> pa.RecordBatch:
+    empty = np.zeros(0, np.uint64)
+    ids = lats = lons = kv = empty
+    info: dict[int, np.ndarray] = {}
     for field, wt, val in _iter_fields(buf):
         if field == 1:
-            info["version"] = val
-        elif field == 2:
-            info["ts_ms"] = val * date_gran
-        elif field == 3:
-            info["changeset"] = val
-        elif field == 4:
-            info["uid"] = val
-        elif field == 5:
-            info["user"] = strings[val]
-        elif field == 6:
-            info["visible"] = bool(val)
-    return info
-
-
-def _decode_dense(buf, strings, gran, lat_off, lon_off, date_gran):
-    ids = lats = lons = []
-    kv = []
-    versions, tss, css, uids, usids, visibles = [], [], [], [], [], []
-    for field, wt, val in _iter_fields(buf):
-        if field == 1:
-            ids = _packed_sint_delta(val)
+            ids = np.cumsum(_zigzag(_varints(val)))
         elif field == 5:  # DenseInfo
             for f2, _, v2 in _iter_fields(val):
-                if f2 == 1:
-                    versions = _packed_varints(v2)
-                elif f2 == 2:
-                    tss = _packed_sint_delta(v2)
-                elif f2 == 3:
-                    css = _packed_sint_delta(v2)
-                elif f2 == 4:
-                    uids = _packed_sint_delta(v2)
-                elif f2 == 5:
-                    usids = _packed_sint_delta(v2)
-                elif f2 == 6:
-                    visibles = _packed_varints(v2)
+                info[f2] = _varints(v2)
         elif field == 8:
-            lats = _packed_sint_delta(val)
+            lats = np.cumsum(_zigzag(_varints(val)))
         elif field == 9:
-            lons = _packed_sint_delta(val)
+            lons = np.cumsum(_zigzag(_varints(val)))
         elif field == 10:
-            kv = _packed_varints(val)
-    out = []
-    kv_pos = 0
-    for i, nid in enumerate(ids):
-        tags = {}
-        while kv_pos < len(kv) and kv[kv_pos] != 0:
-            tags[strings[kv[kv_pos]]] = strings[kv[kv_pos + 1]]
-            kv_pos += 2
-        kv_pos += 1  # the 0 terminator
-        out.append(
-            {
-                "id": nid,
-                "version": versions[i] if versions else 1,
-                "ts_ms": (tss[i] * date_gran) if tss else None,
-                "changeset": css[i] if css else -1,
-                "uid": uids[i] if uids else -1,
-                "user": strings[usids[i]] if usids else "",
-                "visible": bool(visibles[i]) if visibles else True,
-                "tags": tags,
-                "lon": (lon_off + gran * lons[i]) / 1e9,
-                "lat": (lat_off + gran * lats[i]) / 1e9,
-            }
-        )
-    return out
+            kv = _varints(val).astype(np.int64)
+    n = ids.size
+
+    def delta(f: int, default: int) -> np.ndarray:
+        if f not in info:
+            return np.full(n, default, np.int64)
+        return np.cumsum(_zigzag(info[f]))
+
+    pairs = np.zeros(n, np.int64)
+    first = np.zeros(0, np.int64)
+    if n and kv.size:
+        term = _dense_tag_ends(kv, n)
+        starts = np.concatenate([[0], term[:-1] + 1])
+        pairs = (term - starts) // 2
+        first = np.repeat(starts, pairs) + 2 * segment_ranges(pairs)
+    return pa.record_batch(
+        [
+            pa.array(ids, pa.int64()),
+            pa.array(_int64(info[1]).astype(np.int32) if 1 in info
+                     else np.ones(n, np.int32)),
+            pa.array(delta(2, 0) * date_gran * 1000, _TS) if 2 in info
+            else pa.nulls(n, _TS),
+            pa.array(delta(3, -1)),
+            pa.array(delta(4, -1)),
+            table.take(pa.array(delta(5, 0))) if 5 in info
+            else pa.array([""] * n, pa.string()),
+            pa.array(info[6] != 0 if 6 in info else np.ones(n, bool)),
+            _string_map(kv[first], kv[first + 1],
+                        np.concatenate([[0], np.cumsum(pairs)]), table),
+            pa.array((lon_off + gran * lons) / 1e9, pa.float64()),
+            pa.array((lat_off + gran * lats) / 1e9, pa.float64()),
+        ],
+        schema=ARROW_SCHEMAS["nodes"],
+    )
 
 
-def _decode_way(buf, strings, date_gran):
-    way = {"id": 0, "tags": {}, "refs": []}
-    keys = vals = []
-    info = {"version": 1, "ts_ms": None, "changeset": -1, "uid": -1, "user": "", "visible": True}
-    for field, wt, val in _iter_fields(buf):
-        if field == 1:
-            way["id"] = val
-        elif field == 2:
-            keys = _packed_varints(val)
-        elif field == 3:
-            vals = _packed_varints(val)
-        elif field == 4:
-            info = _decode_info(val, strings, date_gran)
-        elif field == 8:
-            way["refs"] = _packed_sint_delta(val)
-    way["tags"] = {strings[k]: strings[v] for k, v in zip(keys, vals)}
-    way.update(info)
-    return way
-
-
-_MEMBER_TYPES = {0: "node", 1: "way", 2: "relation"}
-
-
-def _decode_relation(buf, strings, date_gran):
-    rel = {"id": 0, "tags": {}, "members": []}
-    keys = vals = roles = memids = types = []
-    info = {"version": 1, "ts_ms": None, "changeset": -1, "uid": -1, "user": "", "visible": True}
-    for field, wt, val in _iter_fields(buf):
-        if field == 1:
-            rel["id"] = val
-        elif field == 2:
-            keys = _packed_varints(val)
-        elif field == 3:
-            vals = _packed_varints(val)
-        elif field == 4:
-            info = _decode_info(val, strings, date_gran)
-        elif field == 8:
-            roles = _packed_varints(val)
-        elif field == 9:
-            memids = _packed_sint_delta(val)
-        elif field == 10:
-            types = _packed_varints(val)
-    rel["tags"] = {strings[k]: strings[v] for k, v in zip(keys, vals)}
-    rel["members"] = [
-        (_MEMBER_TYPES[t], mid, strings[r]) for t, mid, r in zip(types, memids, roles)
+def _message_columns(msgs: list[bytes], packed: tuple[int, ...], table, date_gran):
+    """Field walk over Way/Relation messages → (the id + Info columns of
+    the batch, {field: that packed field's bytes per message}). Info
+    defaults as in the format: version 1, no timestamp, changeset and uid
+    -1, user "", visible."""
+    n = len(msgs)
+    ids = [0] * n
+    bufs = {f: [b""] * n for f in packed}
+    version = [1] * n
+    ts = [None] * n
+    cs = [-1] * n
+    uid = [-1] * n
+    usid = [None] * n
+    vis = [True] * n
+    for i, m in enumerate(msgs):
+        for field, wt, val in _iter_fields(m):
+            if field == 1:
+                ids[i] = val
+            elif field == 4:  # Info
+                for f2, _, v2 in _iter_fields(val):
+                    if f2 == 1:
+                        version[i] = v2
+                    elif f2 == 2:
+                        ts[i] = v2 * date_gran * 1000
+                    elif f2 == 3:
+                        cs[i] = v2
+                    elif f2 == 4:
+                        uid[i] = v2
+                    elif f2 == 5:
+                        usid[i] = v2
+                    elif f2 == 6:
+                        vis[i] = bool(v2)
+            elif field in bufs:
+                bufs[field][i] = val
+    columns = [
+        pa.array(_int64(np.asarray(ids, np.uint64))),
+        pa.array(_int64(np.asarray(version, np.uint64)).astype(np.int32)),
+        pa.array(ts, _TS),
+        pa.array(_signed(cs), pa.int64()),
+        pa.array(_signed(uid), pa.int64()),
+        table.take(pa.array(usid, pa.int64())).fill_null(""),
+        pa.array(vis, pa.bool_()),
     ]
-    rel.update(info)
-    return rel
+    return columns, bufs
+
+
+def _signed(vals: list) -> list:
+    """-1 defaults stay, decoded varints read as two's-complement int64."""
+    return [v - (1 << 64) if v >= 1 << 63 else v for v in vals]
+
+
+def _decode_ways(msgs: list[bytes], table, date_gran) -> pa.RecordBatch:
+    columns, bufs = _message_columns(msgs, (2, 3, 8), table, date_gran)
+    t_off, k = _segments(bufs[2], _int64)
+    _, v = _segments(bufs[3], _int64)
+    r_off, r = _segments(bufs[8], _zigzag)
+    refs = pa.ListArray.from_arrays(
+        pa.array(r_off.astype(np.int32)),
+        pa.array(_delta_segments(r_off, r), pa.int64()))
+    return pa.record_batch(columns + [_string_map(k, v, t_off, table), refs],
+                           schema=ARROW_SCHEMAS["ways"])
+
+
+def _decode_relations(msgs: list[bytes], table, date_gran) -> pa.RecordBatch:
+    columns, bufs = _message_columns(msgs, (2, 3, 8, 9, 10), table, date_gran)
+    t_off, k = _segments(bufs[2], _int64)
+    _, v = _segments(bufs[3], _int64)
+    m_off, roles = _segments(bufs[8], _int64)
+    _, mids = _segments(bufs[9], _zigzag)
+    _, types = _segments(bufs[10], _int64)
+    members = pa.StructArray.from_arrays(
+        [
+            _MEMBER_TYPES.take(pa.array(types)),
+            pa.array(_delta_segments(m_off, mids), pa.int64()),
+            table.take(pa.array(roles)),
+        ],
+        names=["type", "id", "role"],
+    )
+    return pa.record_batch(
+        columns + [
+            _string_map(k, v, t_off, table),
+            pa.ListArray.from_arrays(pa.array(m_off.astype(np.int32)), members),
+        ],
+        schema=ARROW_SCHEMAS["relations"],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -376,68 +487,95 @@ REL_SCHEMA = (
     "user string, visible boolean, tags map<string,string>, "
     "members array<struct<type:string, id:long, role:string>>"
 )
+SCHEMAS = {"nodes": NODE_SCHEMA, "ways": WAY_SCHEMA, "relations": REL_SCHEMA}
 
 
-def read_osm_pbf(spark: SparkSession, path: str | Path):
-    """→ (header dict, nodes_df, ways_df, relations_df).
-
-    Blob headers are scanned on the driver (metadata only); blob payloads
-    decode inside tasks — one task per blob batch, so a planet file's
-    thousands of blobs parallelize across the cluster.
-    """
-    import datetime
-
+def _data_blobs(path: str | Path) -> tuple[str, dict, list[dict]]:
+    """(absolute path, header dict, data blob list): blob headers are
+    scanned on the driver (metadata only, S2)."""
     path = str(Path(path).resolve())
     headers = scan_blob_headers(path)
     header_blobs = [h for h in headers if h["type"] == "OSMHeader"]
-    data_blobs = [h for h in headers if h["type"] == "OSMData"]
     header = (
         decode_header_block(_read_blob_payload(path, header_blobs[0]["offset"], header_blobs[0]["size"]))
         if header_blobs
         else {}
     )
+    return path, header, [h for h in headers if h["type"] == "OSMData"]
 
-    def decode_split(blobs):
-        for h in blobs:
-            block = decode_primitive_block(_read_blob_payload(path, h["offset"], h["size"]))
-            yield block
 
-    rdd = spark.sparkContext.parallelize(data_blobs, max(1, len(data_blobs)))
+def _blob_tasks(spark: SparkSession, blobs: list[dict]) -> DataFrame:
+    """One row (the blob's index) per blob: blobs are the input splits,
+    spread over one wave of tasks (`session.kernel_partitions`), each of
+    which decodes its blobs one at a time — a task per blob paid a second
+    wave of task and worker start-up for a few more blobs than cores."""
+    from ..session import kernel_partitions
 
-    def to_ts(ms):
-        if ms is None:
-            return None
-        return datetime.datetime.utcfromtimestamp(ms / 1000.0)
+    return spark.range(0, len(blobs), 1, max(1, min(len(blobs), kernel_partitions(spark))))
 
-    def node_rows(h):
-        block = decode_primitive_block(_read_blob_payload(path, h["offset"], h["size"]))
-        for n in block["nodes"]:
-            yield (
-                n["id"], n["version"], to_ts(n["ts_ms"]), n["changeset"], n["uid"],
-                n["user"], n["visible"], n["tags"], n["lon"], n["lat"],
-            )
 
-    def way_rows(h):
-        block = decode_primitive_block(_read_blob_payload(path, h["offset"], h["size"]))
-        for w in block["ways"]:
-            yield (
-                w["id"], w["version"], to_ts(w["ts_ms"]), w["changeset"], w["uid"],
-                w["user"], w["visible"], w["tags"], w["refs"],
-            )
+def read_osm_pbf(spark: SparkSession, path: str | Path):
+    """→ (header dict, nodes_df, ways_df, relations_df).
 
-    def rel_rows(h):
-        block = decode_primitive_block(_read_blob_payload(path, h["offset"], h["size"]))
-        for r in block["relations"]:
-            yield (
-                r["id"], r["version"], to_ts(r["ts_ms"]), r["changeset"], r["uid"],
-                r["user"], r["visible"], r["tags"],
-                [(t, i, ro) for t, i, ro in r["members"]],
-            )
+    Blob payloads decode inside tasks (`_blob_tasks`), so a planet file's
+    thousands of blobs parallelize across the cluster. Each frame
+    decodes only its own entity type's groups and ships Arrow batches to
+    the JVM (`mapInArrow`)."""
+    path, header, blobs = _data_blobs(path)
 
-    nodes = spark.createDataFrame(rdd.flatMap(node_rows), NODE_SCHEMA)
-    ways = spark.createDataFrame(rdd.flatMap(way_rows), WAY_SCHEMA)
-    rels = spark.createDataFrame(rdd.flatMap(rel_rows), REL_SCHEMA)
-    return header, nodes, ways, rels
+    def frame(kind: str) -> DataFrame:
+        def decode(batches):
+            for b in batches:
+                for i in b.column(0).to_pylist():
+                    h = blobs[i]
+                    yield from decode_primitive_block(
+                        _read_blob_payload(path, h["offset"], h["size"]), (kind,)
+                    )[kind].to_batches()
+
+        return _blob_tasks(spark, blobs).mapInArrow(decode, SCHEMAS[kind])
+
+    return header, frame("nodes"), frame("ways"), frame("relations")
+
+
+def write_entity_scratch(spark: SparkSession, path: str | Path, out_dir: str | Path) -> None:
+    """Decode the PBF once into parquet tables <out_dir>/{nodes,ways,
+    relations} (the schemas of read_osm_pbf's frames).
+
+    One Spark job: each task decodes each of its blobs once and writes one
+    parquet file per entity type the blob holds, so no blob is decoded twice and no row
+    is pickled (the Spark analog of the reference's single PBF pass into
+    its stores, `Contributions2Parquet.java:98-112`). Existing tables
+    under out_dir are replaced."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    path, _, blobs = _data_blobs(path)
+    out = Path(out_dir).resolve()
+    for kind in ENTITY_TYPES:
+        shutil.rmtree(out / kind, ignore_errors=True)
+        (out / kind).mkdir(parents=True)
+
+    def decode(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                h = blobs[i]
+                block = decode_primitive_block(
+                    _read_blob_payload(path, h["offset"], h["size"]))
+                for kind, table in block.items():
+                    if table.num_rows:
+                        pq.write_table(table, out / kind / f"part-{i:05d}.parquet",
+                                       compression="zstd")
+        return iter(())  # the tables are the output: the job returns no rows
+
+    _blob_tasks(spark, blobs).mapInArrow(decode, "blob long").collect()
+
+
+def read_entity_scratch(spark: SparkSession, out_dir: str | Path) -> tuple[DataFrame, ...]:
+    """(nodes, ways, relations) frames over write_entity_scratch's tables."""
+    out = Path(out_dir).resolve()
+    return tuple(
+        spark.read.schema(SCHEMAS[k]).parquet(str(out / k)) for k in ENTITY_TYPES)
 
 
 # ---------------------------------------------------------------------------

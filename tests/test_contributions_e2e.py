@@ -212,3 +212,90 @@ def test_bucketed_entity_scratch_same_rows_fewer_shuffles(spark, fixture_pbf, tm
     a = sorted(map(tuple, plain.select(cols).collect()))
     b = sorted(map(tuple, bucketed.select(cols).collect()))
     assert a == b
+
+
+def _sorted_rows(df):
+    """Rows with tags as sorted map entries (map order is not a value)."""
+    cols = [F.array_sort(F.map_entries(c)).alias(c) if c == "tags" else F.col(c)
+            for c in df.columns]
+    return sorted(map(repr, df.select(cols).collect()))
+
+
+def test_entity_scratch_equals_source_frames(spark, fixture_pbf, tmp_path):
+    """The scratch tables hold exactly read_osm_pbf's frames — same schema,
+    same rows — and the scratch phase is ONE decode job (it was one job per
+    table, each decoding every blob)."""
+    from ohsome_planet_spark.sources.pbf import read_osm_pbf
+
+    sc = spark.sparkContext
+    sc.setJobGroup("entity-scratch", "scratch phase of contributions()")
+    try:
+        contributions(spark, fixture_pbf, entity_scratch=tmp_path)
+        jobs = sc.statusTracker().getJobIdsForGroup("entity-scratch")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) == 1, jobs
+    _, *frames = read_osm_pbf(spark, fixture_pbf)
+    for name, src in zip(("nodes", "ways", "relations"), frames):
+        scratch = spark.read.parquet(str(tmp_path / name))
+        assert scratch.schema == src.schema, name
+        assert _sorted_rows(scratch) == _sorted_rows(src), name
+
+
+def test_node_branch_one_exchange_one_python_eval(spark, fixture_pbf, tmp_path):
+    """In the job, the untagged filter's window and the node windows share
+    ONE exchange on id, and the branch evaluates Python once (the fused
+    point kernel)."""
+    import re
+
+    nodes = contributions(spark, fixture_pbf, entity_types=("node",),
+                          entity_scratch=tmp_path)
+    plan = nodes._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning\(id#\d+L?, \d+\)", plan)) == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1
+
+
+def test_kernel_countries_batched_equal_per_geometry(spark, fixture_pbf):
+    """On the fixture PBF, the production way and relation kernels (one
+    batched join per partition) produce the countries the dict twins
+    produce with the per-geometry `join_geom` joiner."""
+    from ohsome_planet_spark.operators.history import (
+        _relation_partition_kernel,
+        _way_partition_kernel,
+        relation_packed,
+    )
+    from ohsome_planet_spark.operators.history_arrow import (
+        way_packed,
+        way_partition_table,
+    )
+    from ohsome_planet_spark.operators.relation_arrow import relation_partition_table
+    from ohsome_planet_spark.operators.spatial_join import build_index
+    from ohsome_planet_spark.sources.countries import fixture_features
+    from ohsome_planet_spark.sources.pbf import read_osm_pbf
+
+    index = build_index(fixture_features())
+    _, nodes, ways, rels = read_osm_pbf(spark, fixture_pbf)
+    key = ["osm_id", "osm_version", "osm_minor_version", "valid_from"]
+
+    def pandas(tbl):  # the dict twins take ns timestamps
+        pdf = tbl.to_pandas()
+        return pdf.assign(ts=pdf["ts"].astype("datetime64[ns]"))
+
+    def countries(df):
+        df = df.assign(valid_from=pd.to_datetime(df["valid_from"]).astype("datetime64[ns]"))
+        return {tuple(r[:-1]): list(r[-1]) for r in
+                df[key + ["countries"]].itertuples(index=False)}
+
+    tbl = way_packed(ways, nodes).toArrow()
+    new = countries(way_partition_table(tbl, index).to_pandas())
+    old = countries(_way_partition_kernel(
+        pandas(tbl), lambda k, d: index.join_geom(k, d)))
+    assert new == old and len(new) > 100
+    assert sum(bool(c) for c in new.values()) > 5
+
+    tbl = relation_packed(rels, ways, nodes).toArrow()
+    new = countries(relation_partition_table(tbl, index).to_pandas())
+    old = countries(_relation_partition_kernel(
+        pandas(tbl), lambda g: index.join_geom(g[0], g[1])))
+    assert new == old and len(new) >= 20

@@ -272,3 +272,19 @@ def test_node_declarative_plan_shape(spark):
     assert "BatchEvalPython" not in plan  # only ArrowEvalPython kernels
     assert "Window" in plan
     assert "mapInPandas" not in plan and "MapInPandas" not in plan
+
+
+def test_node_plan_one_python_eval(spark, nodes):
+    """The node pipeline evaluates Python once per row: one ArrowEvalPython
+    node running the fused point kernel (WKB, countries and XZ2 together),
+    after the windows, which all share one exchange on id."""
+    import re
+
+    idx = PolygonIndex(fixture_features(), grid_zoom=8)
+    plan = node_contributions(nodes, country_index=idx)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("point_kernel(") == 1, plan
+    assert "point_wkb_udf" not in plan and "pip_countries" not in plan
+    exchanges = re.findall(r"Exchange (\w+)\((\w+)#\d+L?, \d+\), (\w+)", plan)
+    assert exchanges == [("hashpartitioning", "id", "ENSURE_REQUIREMENTS")], plan

@@ -166,3 +166,26 @@ def test_replication_header_roundtrip(tmp_path):
     header2 = decode_header_block(
         _read_blob_payload(str(p2), hdr2["offset"], hdr2["size"]))
     assert "replication_timestamp" not in header2
+
+
+def test_decode_block_empty_tag_values(tmp_path):
+    """Dense keys_vals end each node's tags with a 0 in KEY position; a
+    value can be string 0 (""), so those blocks take the sequential walk
+    and still decode every node's tags exactly."""
+    tags = [{"a": "", "b": "x"}, {}, {"c": ""}, {"d": "y"}]
+    nodes = [
+        {"id": i + 1, "version": 1, "ts_ms": ms(i), "changeset": 1, "uid": 1,
+         "user": "", "visible": True, "tags": t, "lon": 1.0, "lat": 2.0}
+        for i, t in enumerate(tags)
+    ]
+    p = tmp_path / "empty_values.osm.pbf"
+    write_osm_pbf(p, nodes)
+    blob = next(h for h in scan_blob_headers(p) if h["type"] == "OSMData")
+    from ohsome_planet_spark.sources.pbf import _read_blob_payload
+
+    block = decode_primitive_block(
+        _read_blob_payload(str(p), blob["offset"], blob["size"]), ("nodes",))
+    got = block["nodes"].to_pylist()
+    assert [dict(r["tags"]) for r in got] == tags
+    assert [r["user"] for r in got] == [""] * 4
+    assert list(block) == ["nodes"]

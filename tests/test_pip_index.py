@@ -138,3 +138,89 @@ def test_join_points_codes_empty():
     assert offsets.tolist() == [0, 0] and codes.size == 0 and ids == []
     idx = PolygonIndex(fixture_features(), grid_zoom=8)
     assert idx.join_points_codes(np.array([]), np.array([]))[0].tolist() == [0]
+
+
+def _ring(pts):
+    return np.asarray(list(pts) + [pts[0]], np.float64)
+
+
+def _batch_geoms():
+    """(kind code, coords) cases for join_geoms_codes vs join_geom."""
+    rng = np.random.default_rng(11)
+    geoms = [
+        (2, np.array([[-2.0, 10.0], [12.0, 10.0]])),  # crosses AAA, no vertex in it
+        (2, np.array([[4.5, 6.5], [8.5, 6.5]])),  # crosses CCC and its hole
+        (3, _ring([(4.0, 4.0), (9.0, 4.0), (9.0, 9.0), (4.0, 9.0)])),  # encloses CCC
+        (3, _ring([(29.0, 24.0), (37.0, 24.0), (37.0, 32.0), (29.0, 32.0)])),  # encloses DDD part 2
+        (3, _ring([(-5.0, -5.0), (50.0, -5.0), (50.0, 50.0), (-5.0, 50.0)])),  # encloses all
+        (2, np.array([[-1.0, 1.0], [1.0, -1.0]])),  # touches AAA's corner only
+        (2, np.array([[-2.0, 20.0], [12.0, 20.0]])),  # runs along AAA's top edge
+        (2, np.array([[-3.0, 0.0], [0.0, 0.0]])),  # ends on AAA's corner
+        (3, _ring([(-1.0, -1.0), (0.0, -1.0), (0.0, 0.0), (-1.0, 0.0)])),  # corner-touching square
+        (2, np.array([[6.2, 6.2], [6.8, 6.8]])),  # vertices in CCC's hole
+        (3, _ring([(6.2, 6.2), (6.8, 6.2), (6.8, 6.8), (6.2, 6.8)])),  # inside the hole
+        (3, _ring([(5.5, 5.5), (7.5, 5.5), (7.5, 7.5), (5.5, 7.5)])),  # around the hole
+        (1, np.array([[6.5, 6.5]])),  # point in the hole
+        (1, np.array([[20.0, 15.0]])),  # point in an overlap
+        (1, np.zeros((0, 2))),  # empty geometries
+        (2, np.zeros((0, 2))),
+        (3, np.zeros((0, 2))),
+        (2, np.array([[100.0, 80.0], [101.0, 81.0]])),  # far from every part
+    ]
+    for _ in range(60):  # 48-80 vertex lines and rings around the fixture
+        n = int(rng.integers(48, 81))
+        cx, cy = rng.uniform(-5.0, 40.0, 2)
+        r = rng.uniform(0.5, 15.0)
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        pts = np.column_stack([cx + r * np.cos(ang), cy + r * np.sin(ang)])
+        if rng.random() < 0.5:
+            pts = np.round(pts)  # vertices on part edges and corners
+        geoms.append((3, _ring([tuple(p) for p in pts])) if rng.random() < 0.5
+                     else (2, pts))
+    return geoms
+
+
+@pytest.mark.parametrize("grid_zoom", [None, 8])
+def test_join_geoms_codes_equals_join_geom(grid_zoom):
+    """The batched country join returns, per geometry, exactly join_geom's
+    sorted id set: edge crossings without a vertex inside, a part enclosed
+    by a polygon (shell-vertex test), exact edge touches, CCC's hole, empty
+    and Point geometries, long lines and rings."""
+    idx = PolygonIndex(fixture_features(), grid_zoom=grid_zoom)
+    geoms = _batch_geoms()
+    names = {1: "Point", 2: "LineString", 3: "Polygon"}
+    expect = []
+    for kind, c in geoms:
+        if not len(c):
+            expect.append(idx.join_geom(names[kind], None))
+        elif kind == 1:
+            expect.append(idx.join_geom("Point", (c[0, 0], c[0, 1])))
+        elif kind == 2:
+            expect.append(idx.join_geom("LineString", c))
+        else:
+            expect.append(idx.join_geom("Polygon", [c]))
+    offsets, codes, ids = idx.join_geoms_codes(
+        np.array([k for k, _ in geoms]),
+        np.concatenate([[0], np.cumsum([len(c) for _, c in geoms])]),
+        np.concatenate([c[:, 0] for _, c in geoms]),
+        np.concatenate([c[:, 1] for _, c in geoms]))
+    got = [[ids[c] for c in codes[offsets[i]:offsets[i + 1]]]
+           for i in range(len(geoms))]
+    assert got == expect
+    assert got[0] == ["AAA", "BBB"] and got[1] == ["AAA", "CCC"]
+    assert got[2] == ["AAA", "CCC"]  # CCC only through its shell vertices
+    assert got[5] == ["AAA"] and got[8] == ["AAA"]
+    assert got[6] == ["AAA", "BBB", "DDD"]  # AAA only through the exact touch
+    assert got[9] == ["AAA"] and got[10] == ["AAA"] and got[12] == ["AAA"]
+    assert got[14:17] == [[], [], []]
+
+
+def test_join_geoms_codes_point_set_is_union():
+    """A Point with several vertices (a GeometryCollection's vertex set)
+    gets the union of its vertices' ids."""
+    idx = PolygonIndex(fixture_features(), grid_zoom=8)
+    offsets, codes, ids = idx.join_geoms_codes(
+        np.array([1, 1]), np.array([0, 3, 3]),
+        np.array([1.0, 20.0, 6.5]), np.array([1.0, 15.0, 6.5]))
+    assert [ids[c] for c in codes[offsets[0]:offsets[1]]] == ["AAA", "BBB", "EEE"]
+    assert offsets[2] == offsets[1]

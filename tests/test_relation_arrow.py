@@ -357,16 +357,19 @@ def _norm_cell(x):
     return x
 
 
-def _compare_table(pdf, joiner=None):
+def _compare_table(pdf, index=None):
     """relation_partition_table (arrow production path) vs the dict twin,
-    every output column (the dict kernel's xz post-pass is replayed)."""
+    every output column (the dict kernel's xz post-pass is replayed). With
+    an index, the twin joins countries per geometry through `join_geom`
+    while the production kernel batches them."""
     from ohsome_planet_spark.functions.cells import xz2_code
     from ohsome_planet_spark.operators.relation_arrow import (
         relation_partition_table,
     )
 
+    joiner = (lambda g: index.join_geom(g[0], g[1])) if index else None
     old = _relation_partition_kernel(pdf.copy(), joiner)
-    batch = relation_partition_table(_packed_table(pdf), joiner)
+    batch = relation_partition_table(_packed_table(pdf), index)
     assert (old is None) == (batch is None)
     if old is None:
         return 0
@@ -450,3 +453,24 @@ def test_node_dup_rows_collapse():
     assert list(ga) == list(gb)
 
     assert _compare_table(doubled) == len(a)
+
+
+@pytest.mark.parametrize("grid_zoom", [None, 8])
+def test_relation_table_countries_batched_vs_joiner(grid_zoom):
+    """The batched country join (one join_geoms_codes call for the
+    partition's GeometryCollections) equals the per-geometry joiner of the
+    dict twin on every column, countries included."""
+    from ohsome_planet_spark.functions.pip_index import PolygonIndex
+    from ohsome_planet_spark.sources.countries import fixture_features
+
+    index = PolygonIndex(fixture_features(), grid_zoom=grid_zoom)
+    pdf = _adversarial_pdf()
+    assert _compare_table(pdf, index) > 10
+    assert _compare_table(_randomized_pdf(), index) > 40
+    from ohsome_planet_spark.operators.relation_arrow import (
+        relation_partition_table,
+    )
+
+    countries = relation_partition_table(_packed_table(pdf), index).column(
+        "countries").to_pylist()
+    assert any(c for c in countries)
